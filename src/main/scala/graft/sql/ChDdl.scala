@@ -13,7 +13,8 @@ import graft.types.ChTypes
   * plus SELECT delegation to [[ChSql]]. Tables live in a session-
   * scoped in-memory catalog registered as temp views (the Memory
   * engine; MergeTree variants carry their fold Spec so OPTIMIZE
-  * applies the merge semantics).
+  * applies the merge semantics, leaving one folded in-memory part that
+  * FINAL reads without folding again).
   */
 object ChDdl {
 
@@ -39,7 +40,10 @@ object ChDdl {
       // block structure of the table's data as written (sizes of the
       // squashed insert blocks, in order) — the blockSize() family
       // reads it; None once an insert couldn't be modeled statically
-      var blockSizes: Option[Vector[Long]] = Some(Vector.empty))
+      var blockSizes: Option[Vector[Long]] = Some(Vector.empty),
+      // the (df, spec) OPTIMIZE left: while both are still current the
+      // table is one folded part and FINAL reads it as is
+      var optimized: Option[(DataFrame, Spec)] = None)
 
   /** Buffer-engine tables → their destination (StorageBuffer). */
   private val bufferDest =
@@ -1468,14 +1472,21 @@ object ChDdl {
 
   /** `FROM t FINAL` — merge-at-read: register a folded view of the
     * table and point the query at it (CollapsingFinalBlockInputStream
-    * semantics; the fold comes from the table's engine Spec). */
+    * semantics; the fold comes from the table's engine Spec). A table
+    * still as OPTIMIZE left it is one folded part, and the fold is
+    * idempotent on it, so it is read as is; any INSERT, ALTER, ATTACH
+    * or replica sync reassigns `df` (MODIFY PRIMARY KEY: `spec`) and
+    * brings the fold back. */
   private def rewriteFinal(spark: SparkSession, sql: String): String =
     tables.values.foldLeft(sql) { (q, e) =>
       val pat = ("(?<![\\w.`])" + java.util.regex.Pattern.quote(e.name) + "\\s+FINAL\\b").r
       if (pat.findFirstIn(q).isEmpty) q
       else {
         val fview = e.view + "__final"
-        withDeclaredMeta(MergeTreeTable.fold(e.df, e.spec), e.colTypes)
+        val unchanged = e.optimized.exists { case (df, spec) =>
+          (df eq e.df) && spec == e.spec }
+        (if (unchanged) e.df
+         else withDeclaredMeta(MergeTreeTable.fold(e.df, e.spec), e.colTypes))
           .createOrReplaceTempView(fview)
         ChSql.mapOutsideQuotes(q)(seg => pat.replaceAllIn(seg, fview))
       }
@@ -3097,20 +3108,30 @@ object ChDdl {
   private def optimizeTable(spark: SparkSession, stmt: String): Unit = {
     val name = stmt.replaceAll("(?i)^OPTIMIZE\\s+TABLE\\s+", "").replace("`", "").trim
     val entry = lookupTable(name)
-    // Materialize the fold (so repeated OPTIMIZEs don't stack plans)
-    // as a distributed sorted parquet snapshot — the same rewrite
-    // MergeTreeTable.optimize performs on path-backed tables. Nothing
-    // collects to the driver, so a multi-TB Memory-engine table would
-    // compact exactly like a MergeTree part rewrite.
-    val folded = MergeTreeTable.fold(entry.df, entry.spec)
-    val snap = java.nio.file.Files.createTempDirectory("graft_optimize").toString
-    MergeTreeTable.write(folded, snap, entry.spec,
-      org.apache.spark.sql.SaveMode.Overwrite)
-    entry.df = withDeclaredMeta(MergeTreeTable.read(spark, snap), entry.colTypes)
-    // the merge leaves ONE part: the block/part structure collapses
-    // to a single run of the full row count (a parquet count is
-    // metadata-only on the snapshot just written)
+    // The merge leaves ONE folded part, kept in memory like the rest of
+    // this catalog: the fold, sorted by the sort key (the layout
+    // MergeTreeTable.write gives a part; a Collapsing key's first -1
+    // row stays before its last +1 row), materialized by an eager
+    // localCheckpoint, which also cuts the per-INSERT union lineage.
+    // Limit: the checkpointed blocks live in the executors' block
+    // managers with no lineage to recompute them, so losing an executor
+    // loses the table.
+    val order = entry.spec.sortKey ++ (entry.spec.engine match {
+      case MergeTreeTable.Collapsing(sign) => Seq(sign)
+      case _ => Nil
+    })
+    entry.df = withDeclaredMeta(MergeTreeTable.fold(entry.df, entry.spec)
+      .sortWithinPartitions(order.map(qcol).toIndexedSeq: _*)
+      .localCheckpoint(eager = true), entry.colTypes)
+    // the block/part structure collapses to a single run of the full
+    // row count
     entry.blockSizes = Some(Vector(entry.df.count()))
+    // Graphite's rollup depends on the time of the fold: FINAL always
+    // folds it again
+    entry.optimized = entry.spec.engine match {
+      case _: MergeTreeTable.Graphite => None
+      case _ => Some((entry.df, entry.spec))
+    }
     entry.df.createOrReplaceTempView(entry.view)
     syncReplicas(entry)
   }

@@ -35,7 +35,8 @@ object MergeTreeTable {
   final case class Summing(sumCols: Seq[String]) extends Engine
   /** ReplacingMergeTree: keep the max-`version` row per key. */
   final case class Replacing(version: String) extends Engine
-  /** CollapsingMergeTree: ±1 `sign` cancels; keep keys with sign-sum > 0. */
+  /** CollapsingMergeTree: ±1 `sign` rows cancel in merge order; a key
+    * keeps its first -1 and/or last +1 row (see [[fold]]). */
   final case class Collapsing(sign: String) extends Engine
   /** AggregatingMergeTree: merge AggregateFunction states per key.
     * `stateCols` maps state column name → lowercased aggregate base
@@ -109,10 +110,13 @@ object MergeTreeTable {
     * (CollapsingFinalBlockInputStream.cpp; SELECT ... FINAL).
     *
     * For the engines whose fold depends on INSERT ORDER (Replacing's
-    * last-inserted-wins tiebreak, Summing's first-row payload), the
-    * order is reconstructed from persisted data, not read layout: the
-    * part sidecars carry a per-file insert epoch
-    * ([[graft.operators.FooterStats.insertEpochs]]) and
+    * last-inserted-wins tiebreak, Summing's first-row payload,
+    * Collapsing's first-negative/last-positive rows), the order is
+    * reconstructed from persisted data, not read layout: the part
+    * sidecars carry a per-file insert epoch
+    * ([[graft.operators.FooterStats.insertEpochs]]), the file path
+    * orders the files one write produced (part-00000, part-00001, …
+    * in the written DataFrame's partition order) and
     * `_metadata.row_index` gives the position within the sorted part —
     * together the exact merge order of ReplacingSortedBlockInputStream
     * over parts. A future change to file-listing order cannot move
@@ -121,7 +125,7 @@ object MergeTreeTable {
     * insert order — the historical behavior). */
   def readFinal(spark: SparkSession, path: String, spec: Spec): DataFrame =
     spec.engine match {
-      case Replacing(_) | Summing(_) =>
+      case Replacing(_) | Summing(_) | Collapsing(_) =>
         // epochsCoveringAll: None unless EVERY data file has an epoch
         // — a write whose sidecar persist failed (write() swallows
         // those) may be exactly the newest insert, and any default
@@ -148,6 +152,7 @@ object MergeTreeTable {
               .join(broadcast(epochDf), Seq("__graft_file"), "left")
               .withColumn(InsCol, struct(
                 coalesce(col("__graft_epoch"), lit(-1L)).as("e"),
+                col("__graft_file").as("f"),
                 col("__graft_row").as("r")))
               .drop("__graft_file", "__graft_epoch", "__graft_row")
             fold(withIns, spec, Some(InsCol))
@@ -181,22 +186,26 @@ object MergeTreeTable {
     *
     * `insCol`: name of a column IN `df` carrying the insert order
     * (orderable; excluded from the output) — [[readFinal]] passes the
-    * persisted (epoch, row_index) pair. None ⇒ the order derives from
-    * `monotonically_increasing_id()`, which encodes insert order ONLY
-    * while the DataFrame's partition layout still reflects the
-    * insert-union lineage (true for the dialect catalog's in-memory
+    * persisted (epoch, file, row_index) triple. None ⇒ the order
+    * derives from `monotonically_increasing_id()`, which encodes insert
+    * order ONLY while the DataFrame's partition layout still reflects
+    * the insert-union lineage (true for the dialect catalog's in-memory
     * tables, whose batches are coalesce(1)-sorted unions and never
-    * repartitioned between inserts — ChDdl's fold call sites). */
+    * repartitioned between inserts, and whose OPTIMIZEd part keeps each
+    * key's rows together in merge order — ChDdl's fold call sites). */
   def fold(df0: DataFrame, spec: Spec,
       insCol0: Option[String] = None): DataFrame = {
     // only the insert-order-sensitive folds consume insCol; the rest
     // drop it up front so it can never leak into their output
     val (df, insCol) = spec.engine match {
-      case Replacing(_) | Summing(_) => (df0, insCol0)
+      case Replacing(_) | Summing(_) | Collapsing(_) => (df0, insCol0)
       case _ => (insCol0.fold(df0)(df0.drop(_)), None)
     }
     foldImpl(df, spec, insCol)
   }
+
+  /** Column reference that keeps a dotted Nested member name whole. */
+  private def qcol(n: String) = col(if (n.contains(".")) s"`$n`" else n)
 
   private def foldImpl(df: DataFrame, spec: Spec,
       insCol: Option[String]): DataFrame = spec.engine match {
@@ -209,7 +218,6 @@ object MergeTreeTable {
       // output is never empty while input wasn't.
       val keyNames = spec.partitionCol.toSeq ++ spec.sortKey
       val keys = keyNames.map(col)
-      def qcol(n: String) = col(if (n.contains(".")) s"`$n`" else n)
       // Nested groups named *Map fold as MAPS (SummingSortedBlockInputStream
       // map discovery): key members = the first member plus names
       // ending ID/Key/Type (integral element type), value members =
@@ -330,26 +338,38 @@ object MergeTreeTable {
           struct(col(version), col("__ins"))).as("__row"))
         .select(cols.map(c => col("__row").getField(c).as(c)).toIndexedSeq: _*)
     case Collapsing(sign) =>
-      // Deterministic survivor row per key: the max row under the
-      // TOTAL order (sign desc, then every payload column desc) ==
-      // max(struct(sign, payload…)), plus sum(sign), in ONE
-      // partial/final hash aggregation. The former two-window plan
-      // shuffled and per-key-sorted every row; the aggregate folds
-      // map-side (one candidate per key per task into the exchange).
-      // Struct ordering ranks null smallest — identical winner to the
-      // window's desc-nulls-last.
-      val keyNames = spec.partitionCol.toSeq ++ spec.sortKey
-      val keys = keyNames.map(col)
-      val others = df.columns.filterNot(c => (keyNames :+ sign).contains(c))
-      df.groupBy(keys: _*)
-        .agg(max(struct((col(sign) +: others.map(col)).toIndexedSeq: _*)).as("__row"),
-          sum(col(sign)).as("__signsum"))
-        .filter(col("__signsum") > 0)
-        .select(df.columns.map { c =>
-          if (c == sign) col("__signsum").cast("int").as(sign)
-          else if (keyNames.contains(c)) col(c)
-          else col("__row").getField(c).as(c)
-        }.toIndexedSeq: _*)
+      // Reference rule over merge order, per key
+      // (CollapsingSortedBlockInputStream::insertRows):
+      //  - as many +1 as -1 rows and the last one -1 → no row;
+      //  - pos <= neg → the first -1 row;
+      //  - pos >= neg → the last +1 row (so equal counts ending in +1
+      //    keep both, the -1 row first);
+      // every row keeps its own sign. The reference's "all rows
+      // collapsed" edge (emit one row when the whole result would be
+      // empty) is left out. One partial/final hash aggregation: the
+      // counts plus min_by/max_by over the insert order, whose null
+      // orderings (rows of the other sign) are skipped; then at most
+      // two rows per key come back out of an array.
+      val keys = (spec.partitionCol.toSeq ++ spec.sortKey).map(col)
+      val cols = df.columns.filterNot(insCol.contains)
+      val row = struct(cols.map(qcol).toIndexedSeq: _*)
+      val pos = col(sign) > 0
+      val neg = col(sign) < 0
+      val ins = col("__ins")
+      val cancelled = col("__pos") === col("__neg") && !col("__lastIsPos")
+      df.withColumn("__ins", insCol.map(col)
+          .getOrElse(monotonically_increasing_id()))
+        .groupBy(keys: _*)
+        .agg(count(when(pos, 1)).as("__pos"), count(when(neg, 1)).as("__neg"),
+          min_by(row, when(neg, ins)).as("__firstNeg"),
+          max_by(row, when(pos, ins)).as("__lastPos"),
+          max_by(pos, when(pos || neg, ins)).as("__lastIsPos"))
+        .select(explode(array(
+          when(col("__pos") <= col("__neg") && !cancelled, col("__firstNeg")),
+          when(col("__pos") >= col("__neg") && !cancelled, col("__lastPos"))))
+          .as("__row"))
+        .filter(col("__row").isNotNull)
+        .select(cols.map(c => col("__row").getField(c).as(c)).toIndexedSeq: _*)
     case Graphite(params, timeOfMerge) =>
       GraphiteRollup.rollup(df, params,
         timeOfMerge.getOrElse(System.currentTimeMillis() / 1000L))

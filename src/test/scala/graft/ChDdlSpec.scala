@@ -264,4 +264,113 @@ class ChDdlSpec extends SparkSpec {
       .collect()(0).getLong(0) === 2L)
     Seq("ja", "jall").foreach(t => ChDdl.execute(spark, s"DROP TABLE $t"))
   }
+
+  private def rows(sql: String): Seq[String] =
+    ChDdl.execute(spark, sql).get.collect().map(_.mkString("|")).toSeq
+
+  /** Whether FINAL's analyzed plan still folds (an Aggregate). */
+  private def finalFolds(sql: String): Boolean =
+    ChDdl.execute(spark, sql).get.queryExecution.analyzed.collectFirst {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }.nonEmpty
+
+  /** CREATE, the INSERTs, then FINAL before OPTIMIZE, after it and
+    * after a second OPTIMIZE must agree, as must a plain read of the
+    * optimized table. `query` spells the read over a FROM target.
+    * Returns the FINAL rows. */
+  private def finalStableUnderOptimize(create: String, inserts: Seq[String],
+      table: String)(query: String => String): Seq[String] = {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark, create)
+    inserts.foreach(ChDdl.execute(spark, _))
+    val fin = query(s"$table FINAL")
+    val before = rows(fin)
+    ChDdl.execute(spark, s"OPTIMIZE TABLE $table")
+    assert(rows(fin) === before)
+    assert(rows(query(table)) === before)
+    ChDdl.execute(spark, s"OPTIMIZE TABLE $table")
+    assert(rows(fin) === before)
+    ChDdl.execute(spark, s"DROP TABLE $table")
+    before
+  }
+
+  test("Summing / Replacing FINAL is the same before and after OPTIMIZE") {
+    // key 1 sums to zero over a merge and drops; key 3 is a lone zero row
+    val sum = finalStableUnderOptimize(
+      "CREATE TABLE fs (d Date, k UInt32, v Int32) ENGINE = SummingMergeTree(d, k, 8192)",
+      Seq("INSERT INTO fs VALUES ('2020-01-01', 1, 5), ('2020-01-01', 2, 3), ('2020-01-01', 3, 0)",
+        "INSERT INTO fs VALUES ('2020-01-01', 1, -5), ('2020-01-01', 2, 4)"),
+      "fs")(from => s"SELECT k, v FROM $from ORDER BY k")
+    assert(sum === Seq("2|7", "3|0"))
+    val rep = finalStableUnderOptimize(
+      "CREATE TABLE fr (d Date, k UInt32, ver UInt32, v String) " +
+        "ENGINE = ReplacingMergeTree(d, k, 8192, ver)",
+      Seq("INSERT INTO fr VALUES ('2020-01-01', 1, 1, 'old'), ('2020-01-01', 2, 5, 'keep')",
+        "INSERT INTO fr VALUES ('2020-01-01', 1, 2, 'new'), ('2020-01-01', 2, 5, 'tie-last')"),
+      "fr")(from => s"SELECT k, ver, v FROM $from ORDER BY k")
+    assert(rep === Seq("1|2|new", "2|5|tie-last"))
+  }
+
+  test("Collapsing FINAL is the same before and after OPTIMIZE") {
+    // k 1: the cancel-and-rewrite state update keeps the last +1 row;
+    // k 2: as many -1 as +1 rows ending in +1 keeps both; k 3 cancels
+    val got = finalStableUnderOptimize(
+      "CREATE TABLE fc (d Date, k UInt32, val UInt32, sign Int8) " +
+        "ENGINE = CollapsingMergeTree(d, k, 8192, sign)",
+      Seq("INSERT INTO fc VALUES ('2020-01-01', 1, 5, 1), ('2020-01-01', 2, 7, -1), " +
+          "('2020-01-01', 3, 9, 1)",
+        "INSERT INTO fc VALUES ('2020-01-01', 1, 5, -1), ('2020-01-01', 1, 3, 1), " +
+          "('2020-01-01', 2, 8, 1), ('2020-01-01', 3, 9, -1)"),
+      "fc")(from => s"SELECT k, val, sign FROM $from ORDER BY k, sign")
+    assert(got === Seq("1|3|1", "2|7|-1", "2|8|1"))
+  }
+
+  test("Aggregating FINAL is the same before and after OPTIMIZE") {
+    // two inserts of uniq/avg states over numbers 0..9 (n % 3 != 0,
+    // then n % 3 != 1), keyed by parity
+    val got = finalStableUnderOptimize(
+      "CREATE TABLE fa (d Date, k UInt32, u AggregateFunction(uniq, UInt64), " +
+        "a AggregateFunction(avg, UInt64)) ENGINE = AggregatingMergeTree(d, k, 8192)",
+      Seq(0, 1).map(i =>
+        "INSERT INTO fa SELECT toDate('2020-01-01') AS d, number % 2 AS k, " +
+          "uniqState(number) AS u, avgState(number) AS a FROM (SELECT number FROM " +
+          s"system.numbers LIMIT 10) WHERE number % 3 != $i GROUP BY d, k"),
+      "fa")(from => s"SELECT k, uniqMerge(u), avgMerge(a) FROM $from GROUP BY k ORDER BY k")
+    assert(got === Seq(s"0|5|${30.0 / 7}", "1|5|5.0"))
+  }
+
+  test("FINAL folds again after INSERT or ALTER, never skips for Graphite") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark, "CREATE TABLE fi (d Date, k UInt32, v Int32) " +
+      "ENGINE = SummingMergeTree(d, k, 8192)")
+    ChDdl.execute(spark, "INSERT INTO fi VALUES ('2020-01-01', 1, 5), ('2020-01-01', 2, 1)")
+    ChDdl.execute(spark, "INSERT INTO fi VALUES ('2020-01-01', 1, 2)")
+    val fin = "SELECT k, v FROM fi FINAL ORDER BY k"
+    assert(finalFolds(fin))
+    ChDdl.execute(spark, "OPTIMIZE TABLE fi")
+    assert(!finalFolds(fin))
+    assert(rows(fin) === Seq("1|7", "2|1"))
+    ChDdl.execute(spark, "INSERT INTO fi VALUES ('2020-01-01', 2, 4), ('2020-01-01', 3, 1)")
+    assert(finalFolds(fin))
+    assert(rows(fin) === Seq("1|7", "2|5", "3|1"))
+    ChDdl.execute(spark, "OPTIMIZE TABLE fi")
+    assert(!finalFolds(fin))
+    ChDdl.execute(spark, "ALTER TABLE fi ADD COLUMN w Int32")
+    assert(finalFolds(fin))
+    assert(rows(fin) === Seq("1|7", "2|5", "3|1"))
+    // a new sort key changes the fold's grouping, not the data
+    ChDdl.execute(spark, "OPTIMIZE TABLE fi")
+    assert(!finalFolds(fin))
+    ChDdl.execute(spark, "ALTER TABLE fi MODIFY PRIMARY KEY (k, w)")
+    assert(finalFolds(fin))
+    ChDdl.execute(spark, "DROP TABLE fi")
+    // the rollup depends on the time of the fold
+    ChDdl.execute(spark, "CREATE TABLE fg (d Date, Path String, Time UInt32, " +
+      "Value Float64, Version UInt32) " +
+      "ENGINE = GraphiteMergeTree(d, (Path, Time), 8192, 'graphite_rollup')")
+    ChDdl.execute(spark, "INSERT INTO fg VALUES ('1970-01-02', 'site.cpu', 90000, 1.5, 1)")
+    ChDdl.execute(spark, "OPTIMIZE TABLE fg")
+    assert(finalFolds("SELECT Time, Value FROM fg FINAL"))
+    ChDdl.execute(spark, "DROP TABLE fg")
+  }
 }

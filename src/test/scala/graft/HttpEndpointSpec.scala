@@ -77,6 +77,18 @@ class HttpEndpointSpec extends SparkSpec {
     post("DROP TABLE http_t")
   }
 
+  test("CollapsingMergeTree state update over HTTP: FINAL keeps the last +1 row") {
+    post("DROP TABLE IF EXISTS http_col")
+    assert(post("CREATE TABLE http_col (d Date, k UInt32, val UInt32, sign Int8) " +
+      "ENGINE = CollapsingMergeTree(d, k, 8192, sign)").statusCode() == 200)
+    assert(post("INSERT INTO http_col VALUES ('2024-01-01', 1, 5, 1)").statusCode() == 200)
+    // cancel the old state row, write the new one
+    assert(post("INSERT INTO http_col VALUES ('2024-01-01', 1, 5, -1), " +
+      "('2024-01-01', 1, 3, 1)").statusCode() == 200)
+    assert(post("SELECT k, val, sign FROM http_col FINAL ORDER BY k").body() == "1\t3\t1\n")
+    post("DROP TABLE http_col")
+  }
+
   test("errors return 500 with the exception text") {
     val r = post("SELECT nonexistent_fn_xyz(1)")
     assert(r.statusCode() == 500)

@@ -130,16 +130,40 @@ class StorageStreamingSpec extends SparkSpec {
     assert(survivor() === Seq("second"))
   }
 
-  test("Collapsing engine cancels +1/-1 pairs") {
+  test("Collapsing engine keeps the first -1 and the last +1 row in merge order") {
     val path = tmpDir("mt-col")
     val spec = Spec(Seq("k"), engine = Collapsing("sign"))
+    // two inserts; the second spreads two rows per part file over four
+    // files (local[4]), and "tie"'s +1 and -1 rows both sit at row
+    // index 1 of their files: only the file order says which came last
     MergeTreeTable.write(Seq(
-      ("gone", "x", 1), ("gone", "x", -1),
-      ("kept", "y", 1), ("kept", "z", -1), ("kept", "z", 1), ("kept", "z", 1))
-      .toDF("k", "v", "sign"), path, spec, SaveMode.Overwrite)
-    val got = MergeTreeTable.readFinal(spark, path, spec)
-      .select("k", "sign").as[(String, Int)].collect().toMap
-    assert(got === Map("kept" -> 2))
+      ("gone", "x", 1), ("upd", "old", 1), ("neg", "n1", -1), ("eq", "e0", -1))
+      .toDF("k", "v", "sign"), path, spec)
+    MergeTreeTable.write(Seq(
+      ("gone", "x", -1), ("upd", "old", -1),
+      ("upd", "new", 1), ("neg", "n2", -1),
+      ("neg", "p", 1), ("tie", "t", 1),
+      ("eq", "e1", 1), ("tie", "t" * 100000, -1))
+      .toDF("k", "v", "sign"), path, spec)
+    // one scan task reads the files largest first, so the -1 row's
+    // file is read before the +1 row's: read order alone would call
+    // the +1 row the last one
+    val conf = Map("spark.sql.files.maxPartitionBytes" -> "1g",
+      "spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1")
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val got =
+      try MergeTreeTable.readFinal(spark, path, spec)
+        .select("k", "v", "sign").as[(String, String, Int)].collect().sorted.toSeq
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    assert(got === Seq(
+      ("eq", "e0", -1), ("eq", "e1", 1), // equal counts ending in +1: both
+      ("neg", "n1", -1),                 // more -1 rows: the first -1
+      ("upd", "new", 1)))                // more +1 rows: the last +1;
+                                         // "gone" and "tie" cancel out
   }
 
   test("materialized view incrementally folds the insert stream") {
@@ -174,26 +198,23 @@ class StorageStreamingSpec extends SparkSpec {
       .as[(String, Long)].collect().toMap === Map("a" -> 7L, "b" -> 10L)
   }
 
-  test("collapsing fold is deterministic under input order shuffles") {
+  test("collapsing fold follows the insert-order column under any row layout") {
     val spec = Spec(Seq("k"), engine = Collapsing("sign"))
     val rows = Seq(
       ("k1", "v-old", 1), ("k1", "v-old", -1), ("k1", "v-new", 1),
-      ("k2", "a", 1), ("k2", "b", 1), ("k2", "a", -1))
-    val expected = MergeTreeTable.fold(
-      rows.toDF("k", "v", "sign"), spec)
-      .select("k", "v", "sign").as[(String, String, Int)].collect().toSet
-    // every permutation of arrival order folds to the same survivors
-    Seq(rows.reverse, rows.sortBy(_._2), scala.util.Random.shuffle(rows)).foreach { perm =>
-      val got = MergeTreeTable.fold(
-        perm.toDF("k", "v", "sign").repartition(7), spec)
-        .select("k", "v", "sign").as[(String, String, Int)].collect().toSet
-      assert(got === expected, s"fold diverged for order $perm")
+      ("k2", "a", 1), ("k2", "b", 1), ("k2", "a", -1),
+      ("k3", "c", -1), ("k3", "c", 1))
+      .zipWithIndex.map { case ((k, v, sign), i) => (k, v, sign, i.toLong) }
+    // every arrival order folds to the same survivors: the explicit
+    // insert order decides, not the shuffled partition layout
+    Seq(rows, rows.reverse, rows.sortBy(_._2), scala.util.Random.shuffle(rows)).foreach { perm =>
+      val folded = MergeTreeTable.fold(
+        perm.toDF("k", "v", "sign", "ord").repartition(7), spec, Some("ord"))
+      assert(folded.columns.toSeq === Seq("k", "v", "sign"))
+      val got = folded.as[(String, String, Int)].collect().sorted.toSeq
+      assert(got === Seq(("k1", "v-new", 1), ("k2", "b", 1), ("k3", "c", -1), ("k3", "c", 1)),
+        s"fold diverged for order $perm")
     }
-    // survivor payload = max (sign, payload…) tuple — "arrival order"
-    // does not exist after a shuffle, so the deterministic total
-    // order replaces the reference's keep-last-in-part rule
-    // (documented divergence; version-keyed keep-last is Replacing)
-    assert(expected === Set(("k1", "v-old", 1), ("k2", "b", 1)))
   }
 
   test("as-of join attaches the latest right row at or before each left time") {
