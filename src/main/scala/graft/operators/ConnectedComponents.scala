@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions._
   * C never collide directly.
   *
   * Why this algorithm at 100 TB:
-  *  - Each round is two keyed shuffles (a `groupBy(min)` and a
-  *    self equi-join on the same key) — no adjacency list is ever
-  *    collected into a single row, so a supernode with 10⁸ duplicate
-  *    neighbors (boilerplate pages) cannot OOM one executor the way
-  *    a `collect_set`-based label propagation would.
+  *  - Each round is a few keyed shuffles (a per-node window min and
+  *    a `distinct`) — no adjacency list is ever collected into a
+  *    single row, so a supernode with 10⁸ duplicate neighbors
+  *    (boilerplate pages) cannot OOM one executor the way a
+  *    `collect_set`-based label propagation would.
   *  - Convergence is O(log² n) rounds on any graph (proved in the
   *    paper), vs O(diameter) for plain min-label propagation — a
   *    chain of pairwise-similar documents (common with templated
@@ -37,11 +37,6 @@ import org.apache.spark.sql.functions._
   * training-pipeline surface.
   */
 object ConnectedComponents {
-  /** A/B knob (dev only): revert to the r17 groupBy+self-join star
-    * implementations to measure the window-min restructure in one
-    * warm JVM. Same edge sets either way (OperatorSpec). */
-  @volatile private[graft] var useJoinStars: Boolean = false
-
   /** @param edges    undirected edge list (self-loops ignored)
     * @param srcCol   source node column (castable to long)
     * @param dstCol   destination node column (castable to long)
@@ -144,23 +139,13 @@ object ConnectedComponents {
     * to m(u) = min(Γ(u) ∪ {u}). Doubling step — long chains halve.
     *
     * m(u) comes from a WINDOW min over the u-partition — ONE keyed
-    * exchange — where the previous groupBy+self-join spelling paid
-    * two exchanges of the undirected edge list plus a sort-merge
-    * join per round (guide §2.4: two operations keyed the same way
-    * share one exchange). Values are identical: the window min over
-    * partition u is exactly the former per-u aggregate. A supernode's
-    * partition buffers through ExternalAppendOnlyUnsafeRowArray
-    * (spills to disk) — same bytes the former join sorted, no
-    * collected adjacency list. */
+    * exchange, where a per-u groupBy joined back would pay two
+    * exchanges of the undirected edge list plus a sort-merge join per
+    * round. A supernode's partition buffers through
+    * ExternalAppendOnlyUnsafeRowArray (spills to disk) — no collected
+    * adjacency list. */
   private def largeStar(e: DataFrame): DataFrame = {
     val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    if (useJoinStars) {
-      val mins = und.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u")).as("m"))
-      return und.join(mins, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     und.withColumn("m", least(min(col("v")).over(w), col("u")))
       .where(col("v") > col("u"))
@@ -169,25 +154,15 @@ object ConnectedComponents {
 
   /** Small-star: every node u connects its smaller-or-equal neighbors
     * (and itself) to their minimum — flattens local stars. Same
-    * window-min restructure as [[largeStar]]; the per-u (u, m) star
-    * edges are emitted once per input row instead of once per u, and
-    * the duplicates collapse in the final distinct — the edge SET is
-    * unchanged, one exchange cheaper. */
+    * window min as [[largeStar]]; the per-u (u, m) star edges are
+    * emitted once per input row, and the duplicates collapse in the
+    * final distinct. */
   private def smallStar(e: DataFrame): DataFrame = {
     // orient every edge toward the smaller endpoint: (hi, lo) —
     // largeStar's output is already oriented, so this is a free
     // codegen projection, kept for call-order safety
     val or = e.select(greatest(col("u"), col("v")).as("u"),
       least(col("u"), col("v")).as("v"))
-    if (useJoinStars) {
-      val ord = or.distinct()
-      val mins = ord.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val relinked = ord.join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-      return relinked.union(mins.select(col("u"), col("m").as("v")))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     val withM = or.withColumn("m", min(col("v")).over(w))
     withM.select(col("v").as("u"), col("m").as("v"))

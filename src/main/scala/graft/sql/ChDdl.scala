@@ -3109,23 +3109,39 @@ object ChDdl {
     val name = stmt.replaceAll("(?i)^OPTIMIZE\\s+TABLE\\s+", "").replace("`", "").trim
     val entry = lookupTable(name)
     // The merge leaves ONE folded part, kept in memory like the rest of
-    // this catalog: the fold, sorted by the sort key (the layout
-    // MergeTreeTable.write gives a part; a Collapsing key's first -1
-    // row stays before its last +1 row), materialized by an eager
-    // localCheckpoint, which also cuts the per-INSERT union lineage.
-    // Limit: the checkpointed blocks live in the executors' block
-    // managers with no lineage to recompute them, so losing an executor
-    // loses the table.
+    // this catalog: the fold's groups (Summing's before its all-zero
+    // edge) sorted by the sort key (MergeTreeTable.write's part layout;
+    // a Collapsing key's first -1 row stays before its last +1 row), in
+    // a localCheckpoint that also cuts the per-INSERT union lineage. The
+    // job that fills it counts all rows and Summing's surviving groups;
+    // if none survived, the part is the last group by key, picked by the
+    // only other job. Limit: the blocks have no lineage to recompute
+    // them, so losing an executor loses the table.
     val order = entry.spec.sortKey ++ (entry.spec.engine match {
       case MergeTreeTable.Collapsing(sign) => Seq(sign)
       case _ => Nil
     })
-    entry.df = withDeclaredMeta(MergeTreeTable.fold(entry.df, entry.spec)
+    import MergeTreeTable.{KeepCol, KeyCol}
+    val groups = MergeTreeTable.foldGroups(entry.df, entry.spec)
       .sortWithinPartitions(order.map(qcol).toIndexedSeq: _*)
-      .localCheckpoint(eager = true), entry.colTypes)
-    // the block/part structure collapses to a single run of the full
-    // row count
-    entry.blockSizes = Some(Vector(entry.df.count()))
+      .localCheckpoint(eager = false)
+    val keepAt = groups.columns.indexOf(KeepCol)
+    // count over the checkpointed RDD itself: an RDD derived from a plan
+    // of `groups` would keep the inserted rows alive with the table
+    val (rows, survivors) = groups.queryExecution.logical
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+      .map(r => (1L,
+        if (keepAt < 0 || (!r.isNullAt(keepAt) && r.getBoolean(keepAt))) 1L else 0L))
+      .fold((0L, 0L)) { case ((n, k), (pn, pk)) => (n + pn, k + pk) }
+    val (part, partRows) =
+      if (keepAt < 0) (groups, rows)
+      else if (survivors > 0 || rows == 0)
+        (groups.filter(qcol(KeepCol)).drop(KeepCol, KeyCol), survivors)
+      else (spark.createDataFrame(java.util.Arrays.asList(groups.orderBy(
+        qcol(KeyCol).desc).head()), groups.schema).drop(KeepCol, KeyCol), 1L)
+    entry.df = withDeclaredMeta(part, entry.colTypes)
+    // the block/part structure collapses to a single run of its rows
+    entry.blockSizes = Some(Vector(partRows))
     // Graphite's rollup depends on the time of the fold: FINAL always
     // folds it again
     entry.optimized = entry.spec.engine match {

@@ -195,6 +195,31 @@ object MergeTreeTable {
     * key's rows together in merge order — ChDdl's fold call sites). */
   def fold(df0: DataFrame, spec: Spec,
       insCol0: Option[String] = None): DataFrame = {
+    val groups = foldGroups(df0, spec, insCol0)
+    if (!spec.engine.isInstanceOf[Summing]) groups
+    else {
+      // Summing's all-zero edge (keep the last group) needs one global
+      // fact, not a global ordering: a 1-row aggregate (any-survivor
+      // flag, max key tuple) broadcast-cross-joined back. Its second
+      // reduce pass is paid only on these lazy paths (FINAL before
+      // OPTIMIZE, readFinal, optimize); ChDdl's OPTIMIZE decides the
+      // edge on its materialized part.
+      val summary = groups.agg(max(col(KeepCol).cast("int")).as("__any"),
+        max(col(KeyCol)).as("__lastkey"))
+      groups.crossJoin(broadcast(summary))
+        .filter(col(KeepCol) || (col("__any") === 0 && col(KeyCol) === col("__lastkey")))
+        .drop(KeepCol, KeyCol, "__any", "__lastkey")
+    }
+  }
+
+  val KeepCol = "__keep"
+  val KeyCol = "__key"
+
+  /** The fold up to Summing's all-zero edge: for Summing, every folded
+    * group with its [[KeepCol]] flag (whether it survives on its own)
+    * and its [[KeyCol]] tuple; for the other engines, the fold itself. */
+  def foldGroups(df0: DataFrame, spec: Spec,
+      insCol0: Option[String] = None): DataFrame = {
     // only the insert-order-sensitive folds consume insCol; the rest
     // drop it up front so it can never leak into their output
     val (df, insCol) = spec.engine match {
@@ -287,13 +312,6 @@ object MergeTreeTable {
         if (mapGroups.isEmpty) keep0
         else mapGroups.values.map { case (ms, _) => size(qcol(ms.head)) > 0 }
           .foldLeft(keep0)(_ || _)
-      // The "every group zeroed out → keep the last group" edge case
-      // (SummingSortedBlockInputStream.cpp:195-247) needs one global
-      // fact, not a global ordering: a 1-row scalar aggregate
-      // (any-survivor flag + max key tuple) broadcast-cross-joined
-      // back. Costs a second partial-aggregated reduce-to-one-row
-      // pass; the previous empty-key window forced EVERY folded row
-      // through a single partition — a scale-killer.
       // per-row insertion sequence: the caller's data-pinned column
       // when given, else the monotone id (see fold's scaladoc)
       val folded0 = df
@@ -310,15 +328,9 @@ object MergeTreeTable {
         ms.foldLeft(d)((dd, m) =>
           dd.withColumn(m, transform(mergedCol, x => x.getField(m))))
       }
-      val folded = folded1
-        .withColumn("__keep", keep)
-        .withColumn("__key", struct(keys: _*))
-      val summary = folded.agg(
-        max(col("__keep").cast("int")).as("__any"),
-        max(col("__key")).as("__lastkey"))
-      folded.crossJoin(broadcast(summary))
-        .filter(col("__keep") || (col("__any") === 0 && col("__key") === col("__lastkey")))
-        .select(dataCols.map(qcol).toIndexedSeq: _*)
+      // every group stays; the all-zero edge is fold's or the caller's
+      folded1.select((dataCols.map(qcol) :+ keep.as(KeepCol) :+
+        struct(keys: _*).as(KeyCol)).toIndexedSeq: _*)
     case Replacing(version) =>
       // max_by over a groupBy, not a row_number window: a declarative
       // aggregate gets map-side partial aggregation — one survivor

@@ -8,23 +8,17 @@ import org.apache.spark.sql.SparkSession
   * queries instead of the hits table.
   *
   * Usage: SuiteAb <query-prefix-csv> [reps] [knob] [sfDir]
-  *   knob: "ccjoin" (window-min stars vs r17 join stars),
-  *         "packfixed" (fixed-width packed blob records on/off)
+  *   knob: "packfixed" (fixed-width packed blob records on/off)
   */
 object SuiteAb {
   def main(args: Array[String]): Unit = {
     val prefixes = args.headOption.getOrElse("q99_").split(",").map(_.trim)
     val reps = args.lift(1).map(_.toInt).getOrElse(4)
-    val knob = args.lift(2).getOrElse("ccjoin")
+    val knob = args.lift(2).getOrElse("packfixed")
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val (setA, setB): (() => Unit, () => Unit) = knob match {
-      case "packfixed" =>
-        (() => graft.operators.SketchAgg.packFixedEnabled = true,
-          () => graft.operators.SketchAgg.packFixedEnabled = false)
-      case _ =>
-        (() => graft.operators.ConnectedComponents.useJoinStars = false,
-          () => graft.operators.ConnectedComponents.useJoinStars = true)
-    }
+    require(knob == "packfixed", s"unknown knob: $knob")
+    val setA = () => graft.operators.SketchAgg.packFixedEnabled = true
+    val setB = () => graft.operators.SketchAgg.packFixedEnabled = false
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val builder0 = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -311,6 +311,32 @@ class ChDdlSpec extends SparkSpec {
     assert(rep === Seq("1|2|new", "2|5|tie-last"))
   }
 
+  test("Summing FINAL keeps the last group when every group sums to zero") {
+    // the reference writes the last group so that a merge of a
+    // non-empty input is never empty
+    val got = finalStableUnderOptimize(
+      "CREATE TABLE fz (d Date, k UInt32, v Int32) ENGINE = SummingMergeTree(d, k, 8192)",
+      Seq("INSERT INTO fz VALUES ('2020-01-01', 1, 5), ('2020-01-01', 2, 3)",
+        "INSERT INTO fz VALUES ('2020-01-01', 1, -5), ('2020-01-01', 2, -3)"),
+      "fz")(from => s"SELECT k, v FROM $from ORDER BY k")
+    assert(got === Seq("2|0"))
+  }
+
+  test("OPTIMIZE leaves one block of the surviving rows") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark,
+      "CREATE TABLE fb (d Date, k UInt32, v Int32) ENGINE = SummingMergeTree(d, k, 8192)")
+    ChDdl.execute(spark, "INSERT INTO fb VALUES ('2020-01-01', 1, 5), " +
+      "('2020-01-01', 2, 3), ('2020-01-01', 3, 1)")
+    ChDdl.execute(spark, "INSERT INTO fb VALUES ('2020-01-01', 1, -5), ('2020-01-01', 2, 4)")
+    val q = "SELECT k, v, blockSize(), _part_index FROM fb ORDER BY k, _part_index"
+    assert(rows(q) === Seq("1|5|3|0", "1|-5|2|1", "2|3|3|0", "2|4|2|1", "3|1|3|0"))
+    // key 1 sums to zero and drops: the part holds two rows, not three
+    ChDdl.execute(spark, "OPTIMIZE TABLE fb")
+    assert(rows(q) === Seq("2|7|2|0", "3|1|2|0"))
+    ChDdl.execute(spark, "DROP TABLE fb")
+  }
+
   test("Collapsing FINAL is the same before and after OPTIMIZE") {
     // k 1: the cancel-and-rewrite state update keeps the last +1 row;
     // k 2: as many -1 as +1 rows ending in +1 keeps both; k 3 cancels
