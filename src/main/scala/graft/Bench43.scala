@@ -279,19 +279,6 @@ object Bench43 {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B hooks for plan experiments (unset on driver runs)
-    sys.props.get("graft.zerouniq").foreach(v =>
-      graft.operators.SketchAgg.zeroUniqEnabled = v.toBoolean)
-    sys.props.get("graft.bypass").foreach(v =>
-      graft.operators.SketchAgg.bypassEnabled = v.toBoolean)
-    sys.props.get("graft.pack").foreach(v =>
-      graft.operators.SketchAgg.packEnabled = v.toBoolean)
-    sys.props.get("graft.packfixed").foreach(v =>
-      graft.operators.SketchAgg.packFixedEnabled = v.toBoolean)
-    // force the final-stage sort fallback (OOM-safety path) to measure
-    // its cost at scale — r14 pinned correctness only
-    sys.props.get("graft.finalmaxgroups").foreach(v =>
-      graft.operators.SketchAgg.FinalMaxGroups = v.toInt)
     val genOnly = args.contains("generate")
     if (!new java.io.File(path).exists()) {
       System.err.println(s"[bench43] generating $rows rows at $path ...")
@@ -391,8 +378,8 @@ object Bench43 {
     // for the slow aggregation queries. Re-measure the heavy set in
     // ROUND-ROBIN order — each round runs the whole set back-to-back,
     // so every query's samples cover the same host windows and their
-    // medians are mutually comparable (the interleaved-pairs idea of
-    // tools/AbBench promoted into the scored artifact). Off with
+    // medians are mutually comparable (interleaved pairs promoted
+    // into the scored artifact). Off with
     // BENCH43_HEAVY_ROUNDS=0; subset runs skip absent queries.
     // r17 (r16 verdict ask #5): the default set covers every query the
     // r16 artifact measured >2× with a ≥0.1 s baseline (uniq-top-10

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,8 +33,8 @@ import graft.functions.{UniqSketch, UniqSketchCodec, UniqSketchState}
   *
   * admitted when ≥1 agg carries object state (the generic plan would
   * be ObjectHashAggregateExec) or, for plain count/sum/avg shapes,
-  * when a 64-bit group key makes high NDV likely (see [[SketchAgg
-  * .eligible]]),
+  * when a 64-bit or string group key makes high NDV likely (see
+  * [[SketchAgg.eligible]]),
   *
   * with a typed open-addressing map (long/UTF8String keys, no
   * UnsafeRow materialization) over column-striped aggregate state.
@@ -67,18 +67,6 @@ object SketchAgg {
   /** Kill switch, also used by specs to obtain the generic-plan
     * baseline for bit-identical comparison. */
   @volatile private[graft] var enabled: Boolean = true
-  /** Opt-in switch for the zero-object-state shape (plain
-    * count/sum/avg GROUP BYs over a 64-bit key). Default OFF: measured
-    * head-to-head at 100M rows (bench43, cache-pinned, tmpfs shuffle,
-    * min of 4 runs), whole-stage-codegen HashAggregate beats this
-    * operator on the full-scan shapes (q16 4.9 s vs 7.0, q36 5.7 vs
-    * 9.4) and loses only on the filtered ~10M-row variants (q32 3.1
-    * vs 1.9) — the interpreted per-row key readers cost more than the
-    * UnsafeRow map they avoid once codegen's vectorized input path is
-    * in play. The path stays implemented, bit-identity-pinned
-    * (SketchAggSpec), and switchable for future re-measurement on a
-    * quieter host or after a codegen'd reader. */
-  @volatile private[graft] var zeroUniqEnabled: Boolean = false
 
   /** Adaptive partial-agg bypass — ClickHouse's answer to high-NDV
     * GROUP BY keys (two-level table conversion + WithMergeableState
@@ -94,12 +82,12 @@ object SketchAgg {
     * readers, no map). Low-NDV and skewed shapes never trigger (their
     * sample hit rate is high), so map-side combine is preserved
     * exactly where it pays. Decision is per task — a skewed partition
-    * keeps its map while a high-NDV one streams. */
-  @volatile private[graft] var bypassEnabled: Boolean = true
-  /** Rows each partial task aggregates before deciding. */
+    * keeps its map while a high-NDV one streams. Rows each partial
+    * task aggregates before deciding; mutable for tests and the
+    * oracle run (re-sample and bypass pins at small scale). */
   @volatile private[graft] var BypassSampleRows: Int = 1 << 16
   /** groups/sampledRows at or above this ⇒ stream instead of hash. */
-  @volatile private[graft] var BypassRatio: Double = 0.7
+  val BypassRatio: Double = 0.7
   /** A bypassing task re-samples after streaming this many rows: a
     * partition whose first window is high-NDV but whose TAIL is
     * repetitive (clustered-prefix shape — e.g. data sorted so new keys
@@ -107,28 +95,20 @@ object SketchAgg {
     * re-check costs one 64k-row map window per [[BypassRecheckRows]]
     * streamed (<1% overhead) and mirrors the reference's per-block
     * conversion decision, which keeps re-evaluating as blocks arrive
-    * (Interpreters/Aggregator.h:736-744). */
+    * (Interpreters/Aggregator.h:736-744). Mutable for tests only. */
   @volatile private[graft] var BypassRecheckRows: Long = 8L << 20
 
   /** Max group-key arity admitted (see the note in [[eligible]]). */
-  @volatile private[graft] var MaxKeys: Int = 2
-  /** Admit zero-object shapes whose only high-NDV key is a STRING
-    * (see the note in [[eligible]]). ON since r17: the r16 A/B was
-    * weather-inconclusive; re-run in a probe-quiet window at 100M
-    * (AbBench `stringkeys`, 5 interleaved pairs per query), ON won
-    * q34 5/5 pairs (min 3.56 vs 5.17 s), q35 4/5 (min 3.24 vs 5.47),
-    * q13 4/5 (min 0.98 vs 1.11) — the GROUP-BY-URL class moves from
-    * ~2.2–2.4× of the reference baseline to ~1.0–1.1×. */
-  @volatile private[graft] var StringKeysEnabled: Boolean = true
+  val MaxKeys: Int = 2
 
-  /** Packed exchange — ship BLOCKS, not rows (the reference's
-    * Block-granular pipeline: partial states travel as columns of a
-    * block, DataStreams/IBlockInputStream.h, not as per-row messages).
-    * Profiling at 100M rows (r16, tools/ProfileAgg) attributed ~65% of
-    * the heavy-class task time to per-RECORD exchange overhead: 100M
-    * one-row partials cost ~410 ns each to shuffle-write and a similar
-    * fetch+deserialize on the final side, while the actual merge
-    * compute was ~5 s of 107 s. With packing, each partial task
+  /** Packed exchange — keyed shapes ship BLOCKS, not rows (the
+    * reference's Block-granular pipeline: partial states travel as
+    * columns of a block, DataStreams/IBlockInputStream.h, not as
+    * per-row messages). Profiling at 100M rows (r16) attributed ~65%
+    * of the heavy-class task time to per-RECORD exchange overhead:
+    * 100M one-row partials cost ~410 ns each to shuffle-write and a
+    * similar fetch+deserialize on the final side, while the actual
+    * merge compute was ~5 s of 107 s. With packing, each partial task
     * appends its output rows (map-emitted AND bypass-streamed) into
     * per-bucket byte buffers — bucket = hash(key) % [[PackBuckets]] —
     * and emits ONE (bucket, blob) row per [[PackFlushBytes]] window,
@@ -136,25 +116,15 @@ object SketchAgg {
     * sub-rows (same payload schema, same ordinals) and merges exactly
     * as before; bucket count ≫ shuffle partitions keeps reduce skew
     * at balls-in-bins ±few-% without per-task buffers exceeding
-    * PackBuckets × PackFlushBytes. */
-  @volatile private[graft] var packEnabled: Boolean = true
-  /** Bucket fan-out (fixed, independent of shuffle partitions — the
+    * PackBuckets × PackFlushBytes. Keyless (global) aggregation emits
+    * one row per task and is never packed.
+    *
+    * Bucket fan-out is fixed, independent of shuffle partitions — the
     * exchange hashes the bucket id again, so many small buckets spread
-    * evenly over any partition count, including AQE coalescing). */
-  @volatile private[graft] var PackBuckets: Int = 1024
+    * evenly over any partition count, including AQE coalescing. */
+  val PackBuckets: Int = 1024
   /** Per-bucket blob flush threshold (bytes). */
-  @volatile private[graft] var PackFlushBytes: Int = 64 << 10
-  /** Fixed-width blob records (r17 punch list #2): when every payload
-    * field is a fixed-width type, each sub-row serializes to the same
-    * UnsafeRow byte count, so the per-row 4-byte length prefix is
-    * redundant — and when no payload field is nullable, the null
-    * bitmap word is a constant zero and is omitted too. The heavy
-    * count-only shapes (bench43 q16/q36: one long key + count) drop
-    * from 28 to 16 blob bytes/row, cutting exchange write bytes and
-    * unpack work at the information floor the r17 profile attributed
-    * the residual to. Bit-identical sub-rows on the final side
-    * (SketchAggSpec pins pack×fixed layout invariance). */
-  @volatile private[graft] var packFixedEnabled: Boolean = true
+  val PackFlushBytes: Int = 64 << 10
 
   /** count(*) spelled as count(non-null literal) — count(NULL) is NOT
     * a row count (it is 0) and must fall through to the null-checked
@@ -193,14 +163,15 @@ object SketchAgg {
     *    plan is ObjectHashAggregateExec, whose per-row path this
     *    operator beats outright (see header).
     *  - zero object-state (plain count/sum/avg) IF at least one group
-    *    key is a 64-bit integer: the generic plan is codegen
-    *    HashAggregate, which wins at low NDV (its vectorized fast map
-    *    covers ≤2^16 groups), but 64-bit identifier keys (UserID,
-    *    WatchID, ClientIP in the reference schema) are exactly the
-    *    unbounded-domain keys where the UnsafeRow map's probe cost and
-    *    growth dominate — the reference's Aggregator picks a typed
-    *    UInt64 table there (dbms/src/Interpreters/Aggregator.h:691).
-    *    Narrow int/string keys stay with codegen HashAggregate.
+    *    key is a 64-bit integer or a string: the generic plan is
+    *    codegen HashAggregate, which wins at low NDV (its vectorized
+    *    fast map covers ≤2^16 groups), but 64-bit identifier keys
+    *    (UserID, WatchID, ClientIP in the reference schema) and URL-
+    *    class strings are exactly the unbounded-domain keys where the
+    *    UnsafeRow map's probe cost and growth dominate — the
+    *    reference's Aggregator picks a typed UInt64 or string table
+    *    there (dbms/src/Interpreters/Aggregator.h:691). Narrow int keys
+    *    stay with codegen HashAggregate.
     *
     * Sum/Average are admitted under LEGACY and ANSI eval modes (the
     * states raise on Long overflow in ANSI, matching the generic
@@ -208,14 +179,13 @@ object SketchAgg {
   private[operators] def eligible(
       grouping: Seq[NamedExpression],
       aggs: Seq[AggregateExpression]): Boolean = {
-    // ≤MaxKeys (default 2). GroupKeyMap is arity-generic; raising to 3
-    // for the bench q19 shape (UserID, minute, SearchPhrase) was
-    // MEASURED A LOSS at 100M in r15 (SketchAgg 13.6–140 s vs
-    // codegen's stable 9–13 s) — root cause was the FINAL map cloning
-    // a UTF8String per group (~90M groups, allocation/GC storm). r16
-    // replaced the clones with a byte arena and the exchange with
-    // packed blobs, so the admission is re-measurable via the mutable
-    // knob; it stays at 2 unless an interleaved A/B shows a win.
+    // ≤MaxKeys. GroupKeyMap is arity-generic; raising to 3 for the
+    // bench q19 shape (UserID, minute, SearchPhrase) was MEASURED A
+    // LOSS at 100M in r15 (SketchAgg 13.6–140 s vs codegen's stable
+    // 9–13 s) — root cause was the FINAL map cloning a UTF8String per
+    // group (~90M groups, allocation/GC storm). r16 replaced the clones
+    // with a byte arena and the exchange with packed blobs; the limit
+    // stays at 2 until a paired run shows 3 keys winning.
     val keysOk = grouping.length <= MaxKeys && grouping.forall { k =>
       supportedKeyType(k.dataType) && cleanExpr(k)
     }
@@ -238,22 +208,20 @@ object SketchAgg {
           case _ => false
         })
     val shapeOk = keysOk && aggs.nonEmpty && aggs.forall(fnOk)
-    def hasLongKey = grouping.exists(_.dataType == LongType)
-    // StringKeysEnabled extends the zero-object admission to plain
-    // string keys (GROUP BY URL-class shapes) — re-measurable now the
-    // arena map makes string groups allocation-free; A/B via AbBench
-    // knob "stringkeys".
-    def hasStringKey = grouping.exists(_.dataType == StringType)
-    // Zero-object shapes are admitted when the adaptive bypass can
-    // protect them: a 64-bit key at high NDV is exactly where codegen
-    // HashAggregate's partial map is futile (r14 measured the typed
-    // MAP losing to codegen on these full scans — the bypass replaces
-    // the map with a streamed projection, changing the economics).
-    // count/sum/avg all have singleton forms, so the bypass is always
-    // available for this shape.
-    shapeOk && (aggs.exists(e => objectState(e.aggregateFunction)) ||
-      ((zeroUniqEnabled || bypassEnabled) && grouping.nonEmpty &&
-        (hasLongKey || (StringKeysEnabled && hasStringKey))))
+    // Zero-object shapes are admitted where the adaptive bypass
+    // protects them: a 64-bit or string key at high NDV is exactly
+    // where codegen HashAggregate's partial map is futile (r14 measured
+    // the typed MAP alone losing to codegen on these full scans — the
+    // bypass replaces the map with a streamed projection, changing the
+    // economics). count/sum/avg all have singleton forms, so the bypass
+    // is always available for this shape. String keys were measured at
+    // 100M in r17 (5 interleaved pairs per query): q34 won 5/5 pairs
+    // (min 3.56 vs 5.17 s), q35 4/5 (3.24 vs 5.47), q13 4/5 (0.98 vs
+    // 1.11), moving the GROUP-BY-URL class from ~2.2–2.4× of the
+    // reference baseline to ~1.0–1.1×.
+    def keyedOk = grouping.exists(k =>
+      k.dataType == LongType || k.dataType == StringType)
+    shapeOk && (aggs.exists(e => objectState(e.aggregateFunction)) || keyedOk)
   }
 }
 
@@ -262,13 +230,9 @@ object SketchAggStrategy extends SparkStrategy {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(grouping, aggExprs, results, child)
         if SketchAgg.enabled && SketchAgg.eligible(grouping, aggExprs) =>
-      // keyless (global) aggregation has one row per task — nothing to
-      // pack; keyed shapes ship blocks (see SketchAgg.packEnabled)
-      val packed = SketchAgg.packEnabled && grouping.nonEmpty
-      val partial =
-        PartialSketchAggExec(grouping, aggExprs, planLater(child), packed)
+      val partial = PartialSketchAggExec(grouping, aggExprs, planLater(child))
       FinalSketchAggExec(grouping, SketchAgg.AggList(aggExprs), results,
-        partial, packed) :: Nil
+        partial) :: Nil
     case _ => Nil
   }
 }
@@ -480,7 +444,7 @@ private[operators] object AggState {
 }
 
 /** One-row aggregate states in their wire form — StaticInvoke targets
-  * for the bypass projection (see [[SketchAgg.bypassEnabled]]). Each
+  * for the bypass projection (see [[SketchAgg.BypassSampleRows]]). Each
   * method produces exactly the bytes [[AggState.UniqState]] would emit
   * for a group that saw one row with the given value: UniquesHashSet
   * layout [skipDegree=0][varint count][32-bit hashes LE], hash =
@@ -715,6 +679,10 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
   def keys: Seq[NamedExpression]
   def aggs: Seq[AggregateExpression]
 
+  /** Keyed shapes ship packed blobs (see [[SketchAgg.PackBuckets]]);
+    * keyless aggregation has one partial row per task, nothing to pack. */
+  protected def packed: Boolean = keys.nonEmpty
+
   protected def keyIsString: Array[Boolean] =
     keys.map(_.dataType == StringType).toArray
   protected def keyNullable: Array[Boolean] = keys.map(_.nullable).toArray
@@ -744,9 +712,11 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
     *  - (S, 0) nothing nullable — additionally the leading B' null
     *    bitmap bytes (always zero) are omitted: records are S bytes of
     *    VALUE words only, rebuilt into a zeroed scratch row on unpack.
-    * Gated by [[SketchAgg.packFixedEnabled]]. */
+    * Fixed-width sub-rows all serialize to the same UnsafeRow byte
+    * count, so a length prefix would be redundant: the heavy count-only
+    * shapes (bench43 q16/q36: one long key + count) ship 16 blob bytes
+    * per row instead of 28. */
   protected def packRecordSpec: (Int, Int) = {
-    if (!SketchAgg.packFixedEnabled) return (0, 0)
     val fields: Seq[(DataType, Boolean)] =
       keys.map(k => (k.dataType, k.nullable)) ++
         bufferFields.map(f => (f.dataType, f.nullable))
@@ -850,16 +820,14 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
 case class PartialSketchAggExec(
     keys: Seq[NamedExpression],
     aggs: Seq[AggregateExpression],
-    child: SparkPlan,
-    packed: Boolean = false) extends SketchAggExecBase {
+    child: SparkPlan) extends SketchAggExecBase {
 
   // Memoized, NOT a plain lazy val: the attributes fabricate fresh
   // ExprIds and must stay IDENTICAL across tree copies — the packed
   // exchange's HashPartitioning references __bucket by exprId, so a
   // withNewChildInternal copy that re-fabricated ids would break
   // binding at execution (ATTRIBUTE_NOT_FOUND). withNewChildInternal
-  // hands the memo to the copy. (Pre-packing, only ordinal-addressed
-  // buffer attrs flowed downstream, so per-copy ids were harmless.)
+  // hands the memo to the copy.
   // volatile: withNewChildInternal hands the memo to an unsynchronized
   // copy; a racing reader of the copy must never observe a stale null
   // and refabricate fresh exprIds
@@ -963,16 +931,14 @@ case class PartialSketchAggExec(
     val outSchema = StructType(payloadOutput.map(a =>
       StructField(a.name, a.dataType, a.nullable)))
     val flushAt = SketchAgg.PartialFlushGroups
-    // packed-exchange plumbing (see SketchAgg.packEnabled): bucket =
+    // packed-exchange plumbing (see SketchAgg.PackBuckets): bucket =
     // murmur3(key parts) mod PackBuckets, computed by a codegen'd
     // projection over the payload row (same hash for map-emitted and
     // bypass-streamed rows — equal keys always share a bucket)
     val packedLocal = packed
-    val packBuckets = SketchAgg.PackBuckets
-    val packFlush = SketchAgg.PackFlushBytes
     val (packRecBytes, packBitmapKept) = packRecordSpec
     val bucketExpr: Expression =
-      Pmod(new Murmur3Hash(payloadOutput.take(nk)), Literal(packBuckets))
+      Pmod(new Murmur3Hash(payloadOutput.take(nk)), Literal(SketchAgg.PackBuckets))
     val payloadAttrs = payloadOutput
 
     // Computed keys / agg children evaluate through ONE codegen'd
@@ -1032,14 +998,13 @@ case class PartialSketchAggExec(
           projAttrs: Seq[Attribute])
       }
 
-    // Adaptive-bypass plumbing (see SketchAgg.bypassEnabled): knobs
-    // snapshotted at execute, singleton exprs built driver-side, the
-    // codegen'd projection compiled per task (codegen cache dedups).
+    // Adaptive-bypass plumbing (see SketchAgg.BypassSampleRows): sample
+    // sizes snapshotted at execute, singleton exprs built driver-side,
+    // the codegen'd projection compiled per task (codegen cache dedups).
     val bypassSample = SketchAgg.BypassSampleRows.toLong
-    val bypassRatio = SketchAgg.BypassRatio
     val bypassRecheck = SketchAgg.BypassRecheckRows
     val bypassExprs: Option[Seq[Expression]] =
-      if (!SketchAgg.bypassEnabled || nk == 0) None
+      if (nk == 0) None
       else singletonExprs(effKeys, effAggs)
     val mBypassTasks = longMetric("bypassTasks")
     val mBypassRows = longMetric("bypassRows")
@@ -1115,8 +1080,8 @@ case class PartialSketchAggExec(
       // Streams the flush window lazily: one reused output row, no
       // per-group copy — the shuffle writer serializes each row's
       // bytes before pulling the next, so materializing the window
-      // into an Array (the r13 shape) only doubled peak memory right
-      // at the boundary the flush threshold exists to bound. The map
+      // into an Array would only double peak memory right at the
+      // boundary the flush threshold exists to bound. The map
       // and states stay live until the window is drained; the DRIVING
       // iterator below resets them before starting the next window.
       def emit(): Iterator[InternalRow] = {
@@ -1202,7 +1167,7 @@ case class PartialSketchAggExec(
             if (!decided) {
               decided = true
               if (rows.hasNext && sampled > 0 &&
-                  gmap.n >= bypassRatio * sampled) {
+                  gmap.n >= SketchAgg.BypassRatio * sampled) {
                 // futile map (≈ every row opened a new group): drain
                 // the sampled window, then stream the next
                 // [[SketchAgg.BypassRecheckRows]] rows as one-row
@@ -1256,7 +1221,8 @@ case class PartialSketchAggExec(
       if (!packedLocal) payloadIter
       else new PackingIterator(payloadIter,
         UnsafeProjection.create(Seq(bucketExpr), payloadAttrs),
-        packBuckets, packFlush, packRecBytes, packBitmapKept)
+        SketchAgg.PackBuckets, SketchAgg.PackFlushBytes, packRecBytes,
+        packBitmapKept)
     }
   }
 
@@ -1268,7 +1234,7 @@ case class PartialSketchAggExec(
 }
 
 /** Packs payload UnsafeRows into per-bucket byte blobs
-  * ([[SketchAgg.packEnabled]]): emits one (bucket, blob) row whenever
+  * ([[SketchAgg.PackBuckets]]): emits one (bucket, blob) row whenever
   * a bucket crosses `flushBytes`, draining the remainder at input end.
   * Each input row's bytes are copied immediately, so the upstream
   * single-reused-row contract is preserved; emitted blob arrays are
@@ -1405,8 +1371,7 @@ case class FinalSketchAggExec(
     keys: Seq[NamedExpression],
     aggList: SketchAgg.AggList,
     resultExprs: Seq[NamedExpression],
-    child: SparkPlan,
-    packed: Boolean = false) extends SketchAggExecBase {
+    child: SparkPlan) extends SketchAggExecBase {
 
   def aggs: Seq[AggregateExpression] = aggList.aggs
 
@@ -1425,31 +1390,27 @@ case class FinalSketchAggExec(
     // exchange-read share of the loop: every 128th (hasNext, next)
     // pair is timed and extrapolated ×128 — partial rows are uniform
     // (one group per row), so the sample is unbiased at ~0.8%% timer
-    // overhead. mergeLoopNs - fetchNs ≈ merge COMPUTE; the profiling
-    // harness (tools/ProfileAgg) reads both to attribute the
-    // heavy-class residual (exchange serde vs typed-map merge).
+    // overhead. mergeLoopNs - fetchNs ≈ merge COMPUTE: the two
+    // together attribute the heavy-class residual (exchange serde vs
+    // typed-map merge) from the query's SQL metrics.
     "fetchNs" -> org.apache.spark.sql.execution.metric.SQLMetrics
       .createNanoTimingMetric(sparkContext, "exchange fetch+deser (sampled)"))
 
   // result expressions reference the aggregate functions' result
   // attributes, which this node itself produces from merged state;
-  // under the packed exchange the child carries only (bucket, blob),
-  // so the key attributes are also produced HERE (from the unpacked
-  // sub-rows), not passed through
-  override def producedAttributes: AttributeSet = {
-    val base = AttributeSet(aggs.map(_.resultAttribute)) ++ AttributeSet(output)
-    if (packed) base ++ AttributeSet(keys.map(_.toAttribute))
-    else base -- AttributeSet(keys.map(_.toAttribute))
-  }
+  // the packed exchange carries only (bucket, blob), so the key
+  // attributes are also produced HERE (from the unpacked sub-rows),
+  // not passed through
+  override def producedAttributes: AttributeSet =
+    AttributeSet(aggs.map(_.resultAttribute)) ++ AttributeSet(output) ++
+      AttributeSet(keys.map(_.toAttribute))
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (keys.isEmpty) AllTuples :: Nil
-    else if (packed)
-      // cluster by the precomputed bucket id: equal keys share a
-      // bucket by construction, and PackBuckets ≫ partitions keeps
-      // the reduce side balanced under any partition count
-      ClusteredDistribution(Seq(child.output.head)) :: Nil
-    else ClusteredDistribution(keys.map(_.toAttribute)) :: Nil
+    // cluster by the precomputed bucket id: equal keys share a bucket
+    // by construction, and PackBuckets ≫ partitions keeps the reduce
+    // side balanced under any partition count
+    else ClusteredDistribution(Seq(child.output.head)) :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val keyTypes = keys.map(_.dataType).toArray

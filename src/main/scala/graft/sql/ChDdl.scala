@@ -3161,6 +3161,9 @@ object ChDdl {
     setTables.clear()
     joinAnyTables.clear()
     detached.clear()
+    bufferDest.clear()
+    detachedParts.clear()
+    insertedBlockHashes.clear()
     groupParts.clear()
     blockCounters.clear()
     currentDb = None

@@ -399,4 +399,28 @@ class ChDdlSpec extends SparkSpec {
     assert(finalFolds("SELECT Time, Value FROM fg FINAL"))
     ChDdl.execute(spark, "DROP TABLE fg")
   }
+
+  test("reset forgets replicated insert dedup and Buffer destinations") {
+    ChDdl.reset(spark)
+    val create = "CREATE TABLE rr (d Date, x UInt32) ENGINE = " +
+      "ReplicatedMergeTree('/clickhouse/tables/rr', 'r1', d, x, 8192)"
+    ChDdl.execute(spark, create)
+    ChDdl.execute(spark, "INSERT INTO rr VALUES ('2020-01-01', 1)")
+    ChDdl.execute(spark, "CREATE TABLE test.bd (x UInt32) ENGINE = Memory")
+    ChDdl.execute(spark, "CREATE TABLE test.bb (x UInt32) ENGINE = " +
+      "Buffer(test, bd, 1, 10, 100, 10000, 1000000, 10000000, 100000000)")
+    ChDdl.reset(spark)
+    ChDdl.execute(spark, create)
+    ChDdl.execute(spark, "INSERT INTO rr VALUES ('2020-01-01', 1)")
+    assert(ChDdl.execute(spark, "SELECT x FROM rr").get
+      .collect().map(_.getLong(0)).toSeq === Seq(1L))
+    // a re-created table named like the old Buffer keeps its own rows
+    ChDdl.execute(spark, "CREATE TABLE test.bd (x UInt32) ENGINE = Memory")
+    ChDdl.execute(spark, "CREATE TABLE test.bb (x UInt32) ENGINE = Memory")
+    ChDdl.execute(spark, "INSERT INTO test.bb VALUES (7)")
+    assert(ChDdl.execute(spark, "SELECT x FROM test.bb").get
+      .collect().map(_.getLong(0)).toSeq === Seq(7L))
+    assert(ChDdl.execute(spark, "SELECT x FROM test.bd").get.collect().isEmpty)
+    ChDdl.reset(spark)
+  }
 }

@@ -107,7 +107,7 @@ class SketchAggSpec extends SparkSpec {
     } finally SketchAgg.PartialFlushGroups = saved
   }
 
-  test("fixed-record packed blobs (r18): bit-identical across knob combos") {
+  test("fixed-record packed blobs: bit-identical to the generic plan") {
     // count-only long key: all payload fields fixed AND non-nullable —
     // the bitmap-elided record path (8B key + 8B cnt, no len prefix)
     def countOnly = base.groupBy("k1").agg(count(lit(1)).as("c"))
@@ -116,20 +116,11 @@ class SketchAggSpec extends SparkSpec {
     def nullableFixed = base
       .withColumn("k1n", when(col("v").isNull, lit(null)).otherwise(col("k1")))
       .groupBy("k1n").agg(count(lit(1)).as("c"), sum("v").as("s"), avg("v").as("a"))
-    // var-width payload (uniq sketch buffer): stays length-prefixed
+    // var-width payload (uniq sketch buffer): length-prefixed records
     def varWidth = base.groupBy("k1").agg(uniqCol("u").as("nu"), sum("v").as("s"))
-    for (mk <- Seq(() => countOnly, () => nullableFixed, () => varWidth)) {
-      val expected = genericRows(mk())
-      for (fixed <- Seq(true, false)) {
-        SketchAgg.packFixedEnabled = fixed
-        try {
-          val fast = mk()
-          assert(usedSketchAgg(fast))
-          assert(fast.collect().map(_.toString).sorted.toSeq === expected,
-            s"packFixed=$fixed diverged")
-        } finally SketchAgg.packFixedEnabled = true
-      }
-    }
+    compare(countOnly)
+    compare(nullableFixed)
+    compare(varWidth)
   }
 
   test("sum/avg of all-null group is NULL; count is 0-compatible") {
@@ -153,15 +144,10 @@ class SketchAggSpec extends SparkSpec {
     // HashAggregate's territory
     val d3 = base.groupBy("k1i").agg(count(lit(1)).as("c"))
     assert(!usedSketchAgg(d3))
-    // string keys are admitted by default since r17 (StringKeysEnabled,
-    // A/B-measured a win on the GROUP-BY-URL class); with the knob off
-    // the shape must return to the generic path
+    // string keys are admitted (measured a win on the GROUP-BY-URL
+    // class)
     val d4 = base.groupBy("ks").agg(count(lit(1)).as("c"), sum("v").as("s"))
     assert(usedSketchAgg(d4))
-    SketchAgg.StringKeysEnabled = false
-    try assert(!usedSketchAgg(
-      base.groupBy("ks").agg(count(lit(1)).as("c"), sum("v").as("s"))))
-    finally SketchAgg.StringKeysEnabled = true
     // plain aggs with NO keys: global codegen agg
     val d5 = base.agg(count(lit(1)).as("c"), sum("v").as("s"))
     assert(!usedSketchAgg(d5))
@@ -171,8 +157,6 @@ class SketchAggSpec extends SparkSpec {
   }
 
   test("zero-uniq long-key shapes: count/sum/avg bit-identical to codegen plan") {
-    SketchAgg.zeroUniqEnabled = true
-    try {
     // bench q16 shape: single long key + count
     compare(base.groupBy("k1").agg(count(lit(1)).as("c")))
     // bench q33 shape: two keys (long + long-ish) + count/sum/avg
@@ -183,11 +167,10 @@ class SketchAggSpec extends SparkSpec {
     // NULL-heavy value column
     compare(base.groupBy("k1").agg(sum("vn").as("s"), avg("vn").as("a"),
       count(col("vn")).as("cv")))
-    } finally SketchAgg.zeroUniqEnabled = false
   }
 
   test("zero-object STRING-key shapes: count/sum/avg bit-identical to codegen plan") {
-    // the r17 StringKeysEnabled default — bench q34/q35/q13 class
+    // bench q34/q35/q13 class
     compare(base.groupBy("ks").agg(count(lit(1)).as("c")))
     compare(base.groupBy("ks").agg(
       count(lit(1)).as("c"), sum("v").as("s"), avg("v").as("a")))
@@ -195,20 +178,18 @@ class SketchAggSpec extends SparkSpec {
     compare(base.groupBy("ks", "ks2").agg(count(lit(1)).as("c")))
   }
 
-  test("zero-object long-key shapes ride SketchAgg iff bypass or typed map is on") {
-    // default: the adaptive bypass admits them (it protects the
-    // high-NDV case; low NDV keeps the map, which is correct either way)
+  test("zero-object long-key shapes ride SketchAgg") {
+    // the adaptive bypass admits them (it protects the high-NDV case;
+    // low NDV keeps the map, which is correct either way)
     val df = base.groupBy("k1").agg(count(lit(1)).as("c"))
     assert(usedSketchAgg(df))
-    SketchAgg.bypassEnabled = false
-    try {
-      // both switches off: plain long-key shapes stay on codegen
-      val d2 = base.groupBy("k1").agg(count(lit(1)).as("c"))
-      assert(!usedSketchAgg(d2))
-      // sketch shapes unaffected by either switch
-      val du = base.groupBy("k1").agg(uniqCol("u").as("nu"))
-      assert(usedSketchAgg(du))
-    } finally SketchAgg.bypassEnabled = true
+  }
+
+  test("keyed shapes ship packed blobs; keyless shapes ship payload rows") {
+    val keyed = partialOf(base.groupBy("k1").agg(uniqCol("u").as("nu")))
+    assert(keyed.output.map(_.name) === Seq("__bucket", "__blob"))
+    val keyless = partialOf(base.agg(uniqCol("u").as("nu"), count(lit(1)).as("c")))
+    assert(keyless.output.map(_.name) === Seq("uniq0", "cnt1"))
   }
 
   private def partialOf(df: DataFrame): graft.operators.PartialSketchAggExec = {
