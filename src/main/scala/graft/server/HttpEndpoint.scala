@@ -2,13 +2,12 @@ package graft.server
 
 import java.io.OutputStream
 import java.net.{InetSocketAddress, URLDecoder}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-import graft.sources.Formats
-import graft.sql.ChDdl
+import graft.sql.{ChDdl, ChSql}
 
 /** HTTP query endpoint speaking the reference's HTTP protocol
   * (dbms/src/Server/HTTPHandler.cpp:162-280, HTTPRequestHandlerFactory):
@@ -24,10 +23,12 @@ import graft.sql.ChDdl
   *  - errors return HTTP 500 with the exception text in the body,
   *    `X-ClickHouse-Exception-Code` style reduced to plain text.
   *
-  * DDL / INSERT / SELECT all route through [[ChDdl.execute]], so the
-  * endpoint exposes the full dialect (CREATE/INSERT/OPTIMIZE/ALTER,
-  * table functions, FINAL, …). Statements are executed one at a time;
-  * only the last SELECT's result is rendered (the reference rejects
+  * Statements run one at a time through the dialect, so the endpoint
+  * exposes all of it (CREATE/INSERT/OPTIMIZE/ALTER, table functions,
+  * FINAL, …): every statement but the last through [[ChDdl.execute]],
+  * the last through [[ChDdl.executeRendered]], the same renderer the
+  * client path uses (HTTPHandler and the client share executeQuery),
+  * so only the last statement's result is sent (the reference rejects
   * multi-statement, we are slightly laxer for test convenience).
   *
   * Rendering collects the result to the server thread — the endpoint
@@ -65,7 +66,6 @@ final class HttpEndpoint(spark: SparkSession, port: Int = 8123) {
           URLDecoder.decode(kv.substring(i + 1), "UTF-8")
       }.toMap
 
-  private val formatRe = "(?is)\\s+FORMAT\\s+([A-Za-z]+)\\s*;?\\s*$".r
   // an INSERT whose statement ends at `FORMAT <name>`: everything
   // after that line is raw ROW DATA, not SQL (HTTPHandler passes the
   // rest of the body to the format's BlockInputStream)
@@ -123,25 +123,26 @@ final class HttpEndpoint(spark: SparkSession, port: Int = 8123) {
           ChDdl.insertWithData(spark, stmt, data)
           respond(ex, 200, Array.emptyByteArray, "text/plain; charset=UTF-8")
         case _ =>
-          val format = formatRe.findFirstMatchIn(full).map(_.group(1))
-            .orElse(params.get("default_format"))
-            .getOrElse("TabSeparated")
-          var last: Option[DataFrame] = None
-          graft.sql.ChSql.statements(full).foreach { stmt =>
-            last = ChDdl.execute(spark, stmt)
-          }
-          val bytes: Array[Byte] = last match {
-            case None => Array.emptyByteArray
-            case Some(df) => render(df, format)
-          }
+          // the server never writes a file the client names
+          // (00415_into_outfile.sh: INTO OUTFILE over HTTP must fail)
+          require("(?i)\\bINTO\\s+OUTFILE\\b".r.findFirstIn(ChSql.maskQuotes(full)).isEmpty,
+            "INTO OUTFILE is not allowed over HTTP")
+          val stmts = ChSql.statements(full)
+          stmts.dropRight(1).foreach(ChDdl.execute(spark, _))
+          val default = params.get("default_format")
+          val format = ChDdl.outputFormat(stmts.lastOption.getOrElse(""), default)
+          val bytes = stmts.lastOption.flatMap(ChDdl.executeRendered(spark, _, default))
+            .fold(Array.emptyByteArray)(s =>
+              if (ChDdl.BinaryFormats(format)) s.getBytes(ISO_8859_1)
+              else (s + "\n").getBytes(UTF_8))
           respond(ex, 200, bytes, contentTypeOf(format))
       }
   }
 
-  private def contentTypeOf(format: String): String = format.toLowerCase match {
+  private def contentTypeOf(format: String): String = format match {
+    case f if ChDdl.BinaryFormats(f) => "application/octet-stream"
     case "json" | "jsoncompact" | "jsoneachrow" => "application/json; charset=UTF-8"
     case "xml" => "application/xml; charset=UTF-8"
-    case "rowbinary" | "odbcdriver" | "native" => "application/octet-stream"
     case "csv" | "csvwithnames" => "text/csv; charset=UTF-8"
     // Pretty*/Vertical are human-readable text, not TSV
     // (getContentType in FormatFactory — 00265_content_type.sh)
@@ -149,50 +150,4 @@ final class HttpEndpoint(spark: SparkSession, port: Int = 8123) {
       "text/plain; charset=UTF-8"
     case _ => "text/tab-separated-values; charset=UTF-8"
   }
-
-  /** Dispatch to the Formats renderers (FormatFactory.cpp names). */
-  private def render(df: DataFrame, format: String): Array[Byte] =
-    format.toLowerCase match {
-      case "rowbinary" => Formats.rowBinary(df)
-      case "odbcdriver" => Formats.odbcDriver(df)
-      case "native" =>
-        // the engine's columnar native layout is parquet (Formats
-        // registry); serve the single-file encoding of the result
-        val dir = java.nio.file.Files.createTempDirectory("native_out")
-        try {
-          df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-          val part = java.nio.file.Files.list(dir).toArray.map(_.toString)
-            .find(p => p.endsWith(".parquet")).get
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(part))
-        } finally {
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        }
-      case other =>
-        val s = other match {
-          case "tabseparated" | "tsv" => Formats.tabSeparated(df)
-          case "tabseparatedwithnames" | "tsvwithnames" =>
-            Formats.tabSeparatedWithNames(df)
-          case "tabseparatedwithnamesandtypes" | "tsvwithnamesandtypes" =>
-            Formats.tabSeparatedWithNames(df, withTypes = true)
-          case "csv" => Formats.csv(df)
-          case "csvwithnames" => Formats.csv(df, withNames = true)
-          case "json" => Formats.json(df)
-          case "jsoncompact" => Formats.jsonCompact(df)
-          case "jsoneachrow" => Formats.jsonEachRow(df)
-          case "tskv" => Formats.tskv(df)
-          case "values" => Formats.values(df)
-          case "pretty" | "prettycompact" | "prettyspace" => Formats.pretty(df)
-          case "vertical" | "verticalraw" => Formats.vertical(df)
-          case "xml" => Formats.xml(df)
-          case "blocktabseparated" =>
-            // one line per COLUMN, values tab-joined (BlockTabSeparated)
-            val rows = df.limit(1000000).collect()
-            df.columns.indices.map(c => rows.map(r =>
-              Formats.renderRow(Seq(r.get(c)))).mkString("\t")).mkString("\n")
-          case unknown =>
-            throw new IllegalArgumentException(s"Unknown format $unknown")
-        }
-        (s + (if (s.nonEmpty) "\n" else "")).getBytes(UTF_8)
-    }
 }

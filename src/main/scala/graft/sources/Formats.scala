@@ -10,9 +10,13 @@ import org.apache.spark.sql.types.StructType
   * Input/output formats map onto Spark's datasources: TSV/CSV are the
   * csv source with the right separator/header, JSONEachRow is the
   * json source, Native is parquet (our columnar native layout).
-  * Pretty and Vertical are presentation formats — they render a
-  * (small, already-limited) result for a CLI, so they format driver-
-  * side rows rather than pretending to be distributed sinks.
+  *
+  * The result renderers here (values, rows, JSON/XML/Pretty documents,
+  * CSV, TSKV, RowBinary, ODBCDriver) are the building blocks of
+  * [[graft.sql.ChDdl.executeRendered]], which picks one by the
+  * statement's FORMAT and is the only caller that turns a query result
+  * into wire text; they format driver-side rows of a small, already
+  * limited result rather than pretending to be distributed sinks.
   */
 object Formats {
 
@@ -231,15 +235,18 @@ object Formats {
           jsonVal(v, elemTs.lift(i).getOrElse(chType))
         }.mkString("[", ",", "]")
       case n =>
+        // Nullable(T) writes a value the way T does
+        val t = if (chType.startsWith("Nullable("))
+          chType.substring(9, chType.length - 1) else chType
         // a reference-UInt64 in wrapped Long storage prints UNSIGNED
         val s = n match {
-          case l: Long if chType == "UInt64" && l < 0 =>
+          case l: Long if t == "UInt64" && l < 0 =>
             java.lang.Long.toUnsignedString(l)
           case _ => renderValue(n, inArray = false)
         }
         // serializeTextJSON quotes 64-bit integer types (by default —
         // output_format_json_quote_64bit_integers)
-        if (quote64 && (chType == "UInt64" || chType == "Int64"))
+        if (quote64 && (t == "UInt64" || t == "Int64"))
           "\"" + s + "\"" else s
     }
     val sb = new StringBuilder
@@ -470,14 +477,6 @@ object Formats {
     if (res.endsWith("\n")) res.dropRight(1) else res
   }
 
-  /** TabSeparated — the reference's default test-output format
-    * (TabSeparatedRowOutputStream): `\t`-joined values, `\N` nulls,
-    * booleans as UInt8 0/1, arrays as `[1,2]` / `['a','b']`. */
-  def tabSeparated(df: DataFrame, limit: Int = 1000000): String =
-    df.limit(limit).collect()
-      .map(r => r.toSeq.map(renderValue(_, inArray = false)).mkString("\t"))
-      .mkString("\n")
-
   /** TabSeparatedRaw / TSVRaw (TabSeparatedRawRowOutputStream):
     * top-level strings write UNESCAPED; containers keep their
     * literal form. */
@@ -608,16 +607,9 @@ object Formats {
   }
 
   /** TabSeparatedWithNames / …AndTypes — header row(s) then data
-    * (TabSeparatedRowOutputStream with_names/with_types). Types print
-    * under their ClickHouse names. */
-  def tabSeparatedWithNames(df: DataFrame, withTypes: Boolean = false,
-      limit: Int = 1000000): String =
-    tabSeparatedWithNamesTyped(df, withTypes,
-      df.schema.fields.toSeq.map(f =>
-        graft.types.ChTypes.toChName(f.dataType, f.nullable)), limit)
-
-  /** Same, with the caller supplying the CH type spellings (analysis
-    * metadata knows UInt8 where the storage only says Int32). */
+    * (TabSeparatedRowOutputStream with_names/with_types), with the
+    * caller supplying the CH type spellings (analysis metadata knows
+    * UInt8 where the storage only says Int32). */
   def tabSeparatedWithNamesTyped(df: DataFrame, withTypes: Boolean,
       chTypes: Seq[String], limit: Int = 1000000): String = {
     val header = Seq(df.columns.mkString("\t")) ++
@@ -634,58 +626,6 @@ object Formats {
         s"${names(i)}=${renderValue(r.get(i), inArray = false)}").mkString("\t")
     }.mkString("\n")
   }
-
-  private def jsonString(v: Any): String = v match {
-    case null => "null"
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\t", "\\t").replace("\r", "\\r") + "\""
-    case b: Boolean => if (b) "1" else "0"
-    case a: scala.collection.Seq[_] => a.map(jsonString).mkString("[", ",", "]")
-    case r: org.apache.spark.sql.Row => r.toSeq.map(jsonString).mkString("[", ",", "]")
-    case d: Double => renderDouble(d)
-    // 64-bit integers quote (output_format_json_quote_64bit_integers
-    // defaults true — JS consumers lose precision past 2^53); dates /
-    // datetimes render their text form quoted (00407's JSONEachRow)
-    case l: java.lang.Long => "\"" + l + "\""
-    case d: java.sql.Date => jsonString(renderValue(d, inArray = false))
-    case t: java.sql.Timestamp => jsonString(renderValue(t, inArray = false))
-    case other: java.lang.Number => other.toString
-    case other => jsonString(other.toString)
-  }
-
-  /** JSON — the reference's structured output: meta (names + CH type
-    * names), data as objects, rows count (JSONRowOutputStream). */
-  def json(df: DataFrame, limit: Int = 1000000): String = {
-    val meta = df.schema.fields.map(f =>
-      s"""{"name":${jsonString(f.name)},"type":${jsonString(
-        graft.types.ChTypes.toChName(f.dataType, f.nullable))}}""").mkString(",")
-    val rows = df.limit(limit).collect()
-    val data = rows.map(r =>
-      df.columns.indices.map(i =>
-        s"${jsonString(df.columns(i))}:${jsonString(r.get(i))}")
-        .mkString("{", ",", "}")).mkString(",\n")
-    s"""{"meta":[$meta],"data":[\n$data\n],"rows":${rows.length}}"""
-  }
-
-  /** JSONCompact — same meta, data as positional arrays
-    * (JSONCompactRowOutputStream). */
-  def jsonCompact(df: DataFrame, limit: Int = 1000000): String = {
-    val meta = df.schema.fields.map(f =>
-      s"""{"name":${jsonString(f.name)},"type":${jsonString(
-        graft.types.ChTypes.toChName(f.dataType, f.nullable))}}""").mkString(",")
-    val rows = df.limit(limit).collect()
-    val data = rows.map(r =>
-      r.toSeq.map(jsonString).mkString("[", ",", "]")).mkString(",\n")
-    s"""{"meta":[$meta],"data":[\n$data\n],"rows":${rows.length}}"""
-  }
-
-  /** JSONEachRow — one JSON object per line
-    * (JSONEachRowRowOutputStream). */
-  def jsonEachRow(df: DataFrame, limit: Int = 1000000): String =
-    df.limit(limit).collect().map(r =>
-      df.columns.indices.map(i =>
-        s"${jsonString(df.columns(i))}:${jsonString(r.get(i))}")
-        .mkString("{", ",", "}")).mkString("\n")
 
   /** CSV / CSVWithNames (CSVRowOutputStream): strings, dates,
     * datetimes and array literal forms double-quote with `"` doubled
@@ -711,29 +651,6 @@ object Formats {
       if (withNames) Seq(df.columns.map(q).mkString(",")) else Seq.empty
     (header ++ df.limit(limit).collect()
       .map(r => r.toSeq.flatMap(field).mkString(","))).mkString("\n")
-  }
-
-  /** Values — `(1,'a'),(2,'b')` rows (ValuesRowOutputStream). */
-  def values(df: DataFrame, limit: Int = 1000000): String =
-    df.limit(limit).collect()
-      .map(r => r.toSeq.map(renderValue(_, inArray = true)).mkString("(", ",", ")"))
-      .mkString(",")
-
-  /** XML — the reference's XML output shape (XMLRowOutputStream). */
-  def xml(df: DataFrame, limit: Int = 1000000): String = {
-    def esc(s: String) = s.replace("&", "&amp;").replace("<", "&lt;")
-      .replace(">", "&gt;")
-    val meta = df.schema.fields.map(f =>
-      s"<column><name>${esc(f.name)}</name><type>${esc(
-        graft.types.ChTypes.toChName(f.dataType, f.nullable))}</type></column>")
-      .mkString
-    val rows = df.limit(limit).collect()
-    val data = rows.map(r =>
-      df.columns.indices.map(i =>
-        s"<${esc(df.columns(i))}>${esc(renderValue(r.get(i), inArray = false))}</${esc(df.columns(i))}>")
-        .mkString("<row>", "", "</row>")).mkString
-    s"<result><meta><columns>$meta</columns></meta><data>$data</data>" +
-      s"<rows>${rows.length}</rows></result>"
   }
 
   /** RowBinary — fixed-width little-endian scalars, varint-prefixed
@@ -803,28 +720,5 @@ object Formats {
         case v => strBin(renderValue(v, inArray = false))
       })
     out.toByteArray
-  }
-
-  /** Pretty — the reference's boxed table output (PrettyBlockOutputStream). */
-  def pretty(df: DataFrame, limit: Int = 50): String = {
-    val cols = df.columns
-    val rows = df.limit(limit).collect().map(_.toSeq.map(v => if (v == null) "\\N" else v.toString))
-    val widths = cols.indices.map(i => (cols(i).length +: rows.map(_(i).length)).max)
-    def line(l: String, m: String, r: String) =
-      widths.map("─" * _).mkString(l + "─", "─" + m + "─", "─" + r)
-    def row(vs: Seq[String]) =
-      vs.zip(widths).map { case (v, w) => v.padTo(w, ' ') }.mkString("│ ", " │ ", " │")
-    (Seq(line("┌", "┬", "┐"), row(cols.toSeq), line("├", "┼", "┤")) ++
-      rows.map(row) :+ line("└", "┴", "┘")).mkString("\n")
-  }
-
-  /** Vertical — one row per block, `column: value` lines. */
-  def vertical(df: DataFrame, limit: Int = 50): String = {
-    val cols = df.columns
-    val w = cols.map(_.length).max
-    df.limit(limit).collect().zipWithIndex.map { case (r, i) =>
-      s"Row ${i + 1}:\n" + cols.indices.map(j =>
-        s"${cols(j).reverse.padTo(w, ' ').reverse}: ${if (r.isNullAt(j)) "\\N" else r.get(j)}").mkString("\n")
-    }.mkString("\n\n")
   }
 }

@@ -316,22 +316,22 @@ object ChDdl {
     }.toIndexedSeq: _*)
   }
 
-  private def lookupTable(name: String): Entry =
+  /** A table by its given, USE-db-qualified or `default.`-stripped
+    * name (bare names live in the default database). */
+  private def findTable(name: String): Option[Entry] =
     tables.get(name)
       .orElse(tables.get(s"${currentDb.getOrElse("default")}.$name"))
       .orElse(if (name.startsWith("default."))
         tables.get(name.stripPrefix("default.")) else None)
-      .getOrElse(throw new IllegalArgumentException(s"unknown table: $name"))
+
+  private def lookupTable(name: String): Entry =
+    findTable(name).getOrElse(throw new IllegalArgumentException(s"unknown table: $name"))
 
   /** Statically-known column names of a dialect table (None when
     * unknown) — the USING-join rewriter consults this for plain
     * table operands (corpus 00138). */
   private[sql] def tableColumns(name: String): Option[Seq[String]] =
-    tables.get(name)
-      .orElse(tables.get(s"${currentDb.getOrElse("default")}.$name"))
-      .orElse(if (name.startsWith("default."))
-        tables.get(name.stripPrefix("default.")) else None)
-      .map(_.df.columns.toSeq)
+    findTable(name).map(_.df.columns.toSeq)
 
   /** `USE db` state: bare table names resolve as `db.name`. */
   @volatile private var currentDb: Option[String] = None
@@ -1496,13 +1496,35 @@ object ChDdl {
   def executeScript(spark: SparkSession, script: String): Seq[DataFrame] =
     ChSql.statements(script).flatMap(execute(spark, _))
 
-  /** Execute one statement and render TabSeparated the way the
-    * reference's test runner sees it. `WITH TOTALS` results render as
-    * main rows, a blank line, then the totals row with the grouping
-    * keys shown as their type defaults (TotalsHavingBlockInputStream's
-    * side-channel row; the translator models it as GROUPING SETS with
-    * a hidden grouping_id marker). */
-  def executeRendered(spark: SparkSession, stmtRaw: String): Option[String] = {
+  /** Lower-cased Pretty family names: the kind, then NoEscapes. */
+  private val PrettyFormat =
+    "(pretty(?:compact)?(?:monoblock)?|prettyspace)(noescapes)?".r
+
+  /** A statement's trailing `FORMAT <name>` clause. */
+  private val FormatTail = "(?i)\\bFORMAT\\s+(\\w+)\\s*$".r
+
+  /** The output FORMAT of `stmt`, lower-cased (FormatFactory names;
+    * TSV is a synonym of TabSeparated): its FORMAT clause, else
+    * `default` (HTTP's default_format setting), else TabSeparated. */
+  def outputFormat(stmt: String, default: Option[String] = None): String =
+    FormatTail.findFirstMatchIn(stmt.trim.stripSuffix(";").trim).map(_.group(1))
+      .orElse(default).getOrElse("TabSeparated").toLowerCase
+
+  /** The output formats [[executeRendered]] hands back latin1-wrapped,
+    * one char per byte, with no trailing newline. */
+  val BinaryFormats: Set[String] = Set("rowbinary", "odbcdriver", "native")
+
+  /** Execute one statement and render its result in its
+    * [[outputFormat]], the way the reference's client and HTTP
+    * interface see it. This is graft's only result renderer: RunScript,
+    * the corpus specs and [[graft.server.HttpEndpoint]] all print
+    * through it. An unknown format name fails the statement. `WITH
+    * TOTALS` results render as main rows, a blank line, then the totals
+    * row with the grouping keys shown as their type defaults
+    * (TotalsHavingBlockInputStream's side-channel row; the translator
+    * models it as GROUPING SETS with a hidden grouping_id marker). */
+  def executeRendered(spark: SparkSession, stmtRaw: String,
+      defaultFormat: Option[String] = None): Option[String] = {
     // SELECT … INTO OUTFILE 'path' [FORMAT f]: the rendered result
     // goes to the file, nothing to the client (ASTSelectQuery
     // out_file; 00415_into_outfile.sh). Only the top-level tail
@@ -1533,40 +1555,21 @@ object ChDdl {
         try w.println(text) finally w.close()
         return None
       case None =>
-        if ("(?i)\\bINTO\\s+OUTFILE\\b".r.findFirstIn(stmtRaw).isDefined)
+        if ("(?i)\\bINTO\\s+OUTFILE\\b".r.findFirstIn(ChSql.maskQuotes(stmtRaw)).isDefined)
           throw new IllegalArgumentException(
             "INTO OUTFILE is only allowed at the end of the top-level SELECT")
     }
     insertSideOut.set(None)
     val hasTotals = "(?is)\\bWITH\\s+TOTALS\\b".r.findFirstIn(stmtRaw).isDefined
-    // BlockTabSeparated prints COLUMNS as lines (values tab-joined)
     val trimmed = stmtRaw.trim.stripSuffix(";").trim
-    val blockTsv = "(?i)FORMAT\\s+BlockTabSeparated\\s*$".r
-      .findFirstIn(trimmed).isDefined
-    // FORMAT JSON / JSONCompact render the reference's exact JSON shape
-    val jsonFmt = "(?i)FORMAT\\s+(JSONCompact|JSON)\\s*$".r
-      .findFirstMatchIn(trimmed).map(_.group(1))
-    val jsonEachRow = "(?i)FORMAT\\s+JSONEachRow\\s*$".r
-      .findFirstIn(trimmed).isDefined
-    val xmlFmt = "(?i)FORMAT\\s+XML\\s*$".r.findFirstIn(trimmed).isDefined
-    val prettyFmt =
-      "(?i)FORMAT\\s+(Pretty(?:Compact)?(?:MonoBlock)?|PrettySpace)(NoEscapes)?\\s*$".r
-        .findFirstMatchIn(trimmed)
-    // Vertical(Raw): one `col: value` block per row
-    val vertical = "(?i)FORMAT\\s+Vertical(Raw)?\\s*$".r.findFirstMatchIn(trimmed)
-    val tskvFmt = "(?i)FORMAT\\s+TSKV\\s*$".r.findFirstIn(trimmed).isDefined
-    val tsvNames =
-      "(?i)FORMAT\\s+(?:TabSeparated|TSV)WithNames(AndTypes)?\\s*$".r
-        .findFirstMatchIn(trimmed)
-    // TSV is a synonym of TabSeparated (FormatFactory registration);
-    // the Raw variants write strings unescaped
-    val tsvRaw = "(?i)FORMAT\\s+(?:TabSeparatedRaw|TSVRaw)\\s*$".r
-      .findFirstIn(trimmed).isDefined
-    val rowBinaryFmt = "(?i)FORMAT\\s+RowBinary\\s*$".r
-      .findFirstIn(trimmed).isDefined
-    val odbcFmt = "(?i)FORMAT\\s+ODBCDriver\\s*$".r
-      .findFirstIn(trimmed).isDefined
-    val csvFmt = "(?i)FORMAT\\s+CSV(WithNames)?\\s*$".r.findFirstMatchIn(trimmed)
+    val format = outputFormat(trimmed, defaultFormat)
+    val noFmt = FormatTail.findFirstMatchIn(trimmed)
+      .fold(trimmed)(m => trimmed.substring(0, m.start).trim)
+    // DESCRIBE / SHOW / EXISTS read a table name up to the end of the
+    // statement: their FORMAT clause is presentation only
+    val query =
+      if ("(?i)^(DESC|DESCRIBE|SHOW|EXISTS)\\b".r.findFirstIn(trimmed).isDefined) noFmt
+      else stmtRaw
     // The totals side-channel row is NOT subject to LIMIT
     // (TotalsHavingBlockInputStream sits before the limit in the
     // reference pipeline, the limit applies to main rows only): hoist
@@ -1575,13 +1578,14 @@ object ChDdl {
     val totalsLimitRe =
       "(?is)\\bLIMIT\\s+(\\d+)\\s*((?:FORMAT\\s+\\w+)?)\\s*$".r
     val (stmt, mainLimit) =
-      if (!hasTotals) (stmtRaw, None)
+      if (!hasTotals) (query, None)
       else totalsLimitRe.findFirstMatchIn(trimmed) match {
         case Some(m) if !trimmed.substring(0, m.start).toUpperCase.endsWith("BY ") =>
           (trimmed.substring(0, m.start) + " " + m.group(2),
             Some(m.group(1).toInt))
-        case _ => (stmtRaw, None)
+        case _ => (query, None)
       }
+    def nonEmpty(out: String): Option[String] = if (out.isEmpty) None else Some(out)
     execute(spark, stmt).map(decodeEnums).map { df0 =>
       // hidden sort keys projected by the WITH TOTALS rewrite (ORDER
       // BY over a non-selected group key) never render; dropping
@@ -1591,20 +1595,28 @@ object ChDdl {
       // byte-transparent mode: view String data as raw bytes so
       // invalid UTF-8 survives collect() (Formats.byteMode)
       if (Formats.byteMode.get()) byteView(df1) else df1
-    }.flatMap { df =>
-      if (rowBinaryFmt) {
-        // FORMAT RowBinary: the raw row bytes, latin1-wrapped so the
-        // String pipeline is byte-preserving; no trailing newline
-        val blob = Formats.latin1(Formats.rowBinary(df))
-        if (blob.isEmpty) None else Some(blob)
-      }
-      else if (odbcFmt) {
-        // FORMAT ODBCDriver: header + text values, varint-framed
-        Some(Formats.latin1(Formats.odbcDriver(df)))
-      }
-      else if (jsonFmt.isDefined || jsonEachRow || xmlFmt) {
-        val compact = jsonFmt.exists(_.equalsIgnoreCase("JSONCompact"))
-        val noFmt = trimmed.replaceAll("(?i)\\s+FORMAT\\s+\\w+\\s*$", "")
+    }.flatMap { df => format match {
+      // the BinaryFormats come back latin1-wrapped so the String
+      // pipeline is byte-preserving; no trailing newline
+      case "rowbinary" => nonEmpty(Formats.latin1(Formats.rowBinary(df)))
+      // header + text values, varint-framed
+      case "odbcdriver" => Some(Formats.latin1(Formats.odbcDriver(df)))
+      case "native" =>
+        // the engine's columnar native layout is parquet (Formats
+        // registry): the single-file encoding of the result
+        val dir = java.nio.file.Files.createTempDirectory("native_out")
+        try {
+          df.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+          val part = java.nio.file.Files.list(dir).toArray.map(_.toString)
+            .find(_.endsWith(".parquet")).get
+          Some(Formats.latin1(java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(part))))
+        } finally {
+          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+        }
+      case "json" | "jsoncompact" | "jsoneachrow" | "xml" =>
+        // the reference's exact JSON / XML shapes
         val gid = df.columns.indexOf("__gid")
         val outFields = df.schema.fields.zipWithIndex
           .filter(_._2 != gid).map(_._1).toSeq
@@ -1658,23 +1670,21 @@ object ChDdl {
             Some((idx.map(i => Extremes.pick(filled.map(_(i)), min = true)),
               idx.map(i => Extremes.pick(filled.map(_(i)), min = false))))
           }
-        if (xmlFmt)
+        if (format == "xml")
           Some(Formats.renderXml(names, chTypes,
             mainRows.map(r => vals(r, totals = false)).toSeq,
             totRows.headOption.map(r => vals(r, totals = true)),
             extremesJson, rowsBeforeLimit(spark, noFmt)))
-        else if (jsonEachRow)
+        else if (format == "jsoneachrow")
           Some(Formats.renderJsonEachRow(names, chTypes,
             mainRows.map(r => vals(r, totals = false)).toSeq,
             quote64 = jsonQuote64))
         else Some(Formats.renderJson(names, chTypes,
           mainRows.map(r => vals(r, totals = false)).toSeq,
           totRows.headOption.map(r => vals(r, totals = true)),
-          rowsBeforeLimit(spark, noFmt), compact,
+          rowsBeforeLimit(spark, noFmt), compact = format == "jsoncompact",
           quote64 = jsonQuote64, extremes = extremesJson))
-      }
-      else if (vertical.isDefined) {
-        val raw = vertical.get.group(1) != null
+      case "vertical" | "verticalraw" =>
         val rows = df.limit(1000000).collect()
         if (rows.isEmpty) None
         else {
@@ -1684,19 +1694,18 @@ object ChDdl {
           Some(rows.zipWithIndex.map { case (r, i) =>
             s"Row ${i + 1}:\n──────\n" + df.columns.indices.map { c =>
               val v =
-                if (raw) Option(r.get(c)).map(_.toString).getOrElse("\\N")
+                if (format == "verticalraw")
+                  Option(r.get(c)).map(_.toString).getOrElse("\\N")
                 else Formats.renderValue(r.get(c), inArray = false)
               (df.columns(c) + ":").padTo(nameW + 1, ' ') + s" $v"
             }.mkString("\n")
           }.mkString("\n"))
         }
-      } else if (prettyFmt.isDefined) {
-        val kindRaw = prettyFmt.get.group(1)
-        val noEsc = prettyFmt.get.group(2) != null
-        val mono = kindRaw.toLowerCase.endsWith("monoblock")
-        val kind = kindRaw.replaceAll("(?i)MonoBlock$", "") match {
-          case k if k.equalsIgnoreCase("PrettyCompact") => "PrettyCompact"
-          case k if k.equalsIgnoreCase("PrettySpace") => "PrettySpace"
+      case PrettyFormat(kindRaw, noEsc) =>
+        val mono = kindRaw.endsWith("monoblock")
+        val kind = kindRaw.stripSuffix("monoblock") match {
+          case "prettycompact" => "PrettyCompact"
+          case "prettyspace" => "PrettySpace"
           case _ => "Pretty"
         }
         // block structure of the result stream: max_block_size chunks
@@ -1708,8 +1717,7 @@ object ChDdl {
         // (Spark's derived names leak internal wrappers; 00298 shows
         // toInt8(x), not ch_type_tag(x))
         val itemsP = ChSql.selectItems(
-          trimmed.replaceAll("(?i)\\s+FORMAT\\s+\\w+\\s*$", "")
-            .replaceAll("(?is)\\bSETTINGS\\b.*$", ""))
+          noFmt.replaceAll("(?is)\\bSETTINGS\\b.*$", ""))
         val headerNames =
           if (itemsP.length == df.columns.length) itemsP.map(_._1)
           else df.columns.toSeq
@@ -1736,13 +1744,11 @@ object ChDdl {
             case _ => graft.types.ChEnum.of(f).isDefined
           }
         }
-        val outTxt = Formats.renderPretty(kind, noEsc,
-          headerNames, alignRight, blocks, prettyMaxRows)
-        if (outTxt.isEmpty) None else Some(outTxt)
-      } else if (tskvFmt) {
-        val out = Formats.tskv(df)
-        if (out.isEmpty) None else Some(out)
-      } else if (tsvNames.isDefined) {
+        nonEmpty(Formats.renderPretty(kind, noEsc != null,
+          headerNames, alignRight, blocks, prettyMaxRows))
+      case "tskv" => nonEmpty(Formats.tskv(df))
+      case "tabseparatedwithnames" | "tsvwithnames" |
+          "tabseparatedwithnamesandtypes" | "tsvwithnamesandtypes" =>
         // type header spells the CH names: prefer the analysis-time
         // ch.type field metadata (ChTypeNameResolution alias tags),
         // fall back to the storage-derived spelling
@@ -1752,20 +1758,25 @@ object ChDdl {
           else ChTypes.toChName(f.dataType, f.nullable)
         }
         Some(Formats.tabSeparatedWithNamesTyped(df,
-          withTypes = tsvNames.get.group(1) != null, chTypes = types))
-      } else if (tsvRaw) {
-        val out = Formats.tabSeparatedRaw(df)
-        if (out.isEmpty) None else Some(out)
-      } else if (csvFmt.isDefined) {
-        val out = Formats.csv(df, withNames = csvFmt.get.group(1) != null)
-        if (out.isEmpty) None else Some(out)
-      } else if (blockTsv) {
+          withTypes = format.endsWith("andtypes"), chTypes = types))
+      // the Raw variants write strings unescaped
+      case "tabseparatedraw" | "tsvraw" => nonEmpty(Formats.tabSeparatedRaw(df))
+      case "csv" | "csvwithnames" =>
+        nonEmpty(Formats.csv(df, withNames = format == "csvwithnames"))
+      case "blocktabseparated" =>
+        // one line per COLUMN, values tab-joined
         val rows = df.limit(1000000).collect()
         if (rows.isEmpty) None
         else Some(df.columns.indices.map(i =>
           rows.map(r => Formats.renderValue(r.get(i), inArray = false))
             .mkString("\t")).mkString("\n"))
-      } else if (!hasTotals || !df.columns.contains("__gid")) {
+      // Values (ValuesRowOutputStream): `(1,'a'),(2,'b')`, every value
+      // in its literal form
+      case "values" =>
+        nonEmpty(df.limit(1000000).collect().map(_.toSeq
+          .map(Formats.renderValue(_, inArray = true)).mkString("(", ",", ")"))
+          .mkString(","))
+      case "tabseparated" | "tsv" if !hasTotals || !df.columns.contains("__gid") =>
         // a zero-row result prints NOTHING (not an empty line), while
         // one row holding '' legitimately prints one empty line
         val rows = df.limit(1000000).collect()
@@ -1804,7 +1815,7 @@ object ChDdl {
         if (rows.isEmpty) None
         else Some(rows.map(r => Formats.renderRow(fill(r))).mkString("\n") +
           extremesTail)
-      } else Some {
+      case "tabseparated" | "tsv" =>
         val gid = df.columns.indexOf("__gid")
         val fields = df.schema.fields
         // 1 M-row render bound on the MAIN block only — the totals
@@ -1820,8 +1831,7 @@ object ChDdl {
         // (corpus 00257: `select 40 as z … group by z WITH TOTALS`
         // prints 40 in totals, not 0)
         val outIdx = fields.indices.filter(_ != gid)
-        val itemsForConst = ChSql.selectItems(
-          trimmed.replaceAll("(?i)\\s+FORMAT\\s+\\w+\\s*$", ""))
+        val itemsForConst = ChSql.selectItems(noFmt)
         def litOf(e: String): Option[Any] = {
           val s = e.trim
           if (s.matches("-?\\d+")) Some(s.toLong)
@@ -1844,11 +1854,15 @@ object ChDdl {
           }.toSeq
         val (tot, main0) = rows.partition(_.getAs[Number](gid).longValue != 0L)
         val main = mainLimit.fold(main0)(main0.take)
-        (main.map(r => Formats.renderRow(values(r, totals = false))) ++
+        Some((main.map(r => Formats.renderRow(values(r, totals = false))) ++
           Seq("") ++
-          tot.map(r => Formats.renderRow(values(r, totals = true)))).mkString("\n")
-      }
-    }.orElse(insertSideOut.get())
+          tot.map(r => Formats.renderRow(values(r, totals = true)))).mkString("\n"))
+      // Null (NullOutputFormat) runs the query and prints nothing
+      case "null" =>
+        df.write.format("noop").mode("overwrite").save()
+        None
+      case other => throw new IllegalArgumentException(s"Unknown format $other")
+    }}.orElse(insertSideOut.get())
   }
 
   /** Render the stored numeric form of every enum-tagged output
@@ -2314,11 +2328,11 @@ object ChDdl {
       if (engine == "Buffer") {
         val ps = engineArgs.map(splitArgs).getOrElse(Seq.empty).map(_.trim)
         if (ps.length >= 2) {
-          val destName = s"${ps(0).replace("'", "")}.${ps(1).replace("'", "")}"
-          tables.get(destName).foreach { destE =>
-            bufferDest.put(name, destName)
-            entry.df = destE.df
-          }
+          findTable(s"${ps(0).replace("'", "")}.${ps(1).replace("'", "")}")
+            .foreach { destE =>
+              bufferDest.put(name, destE.name)
+              entry.df = destE.df
+            }
         }
       }
       // a new replica of an existing group starts with the group's

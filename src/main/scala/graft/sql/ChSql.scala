@@ -2585,7 +2585,7 @@ object ChSql {
 
   /** Blank quoted text only — parens stay visible and offsets are
     * kept, so regex matches on the mask index into the original. */
-  private[sql] def maskQuotes(s: String): String = {
+  private[graft] def maskQuotes(s: String): String = {
     val out = s.toCharArray
     var inQ = false
     var esc = false

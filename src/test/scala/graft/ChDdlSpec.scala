@@ -423,4 +423,20 @@ class ChDdlSpec extends SparkSpec {
     assert(ChDdl.execute(spark, "SELECT x FROM test.bd").get.collect().isEmpty)
     ChDdl.reset(spark)
   }
+
+  test("Buffer over a bare destination name forwards writes to it") {
+    ChDdl.execute(spark, "DROP TABLE IF EXISTS bb")
+    ChDdl.execute(spark, "DROP TABLE IF EXISTS bd")
+    ChDdl.execute(spark, "CREATE TABLE bd (x UInt32) ENGINE = Memory")
+    // `default.bd` names the bare `bd`, as it does in reads and INSERTs
+    ChDdl.execute(spark, "CREATE TABLE bb (x UInt32) ENGINE = " +
+      "Buffer(default, bd, 1, 10, 100, 10000, 1000000, 10000000, 100000000)")
+    ChDdl.execute(spark, "INSERT INTO bb VALUES (7)")
+    assert(ChDdl.execute(spark, "SELECT x FROM bd").get
+      .collect().map(_.getLong(0)).toSeq === Seq(7L))
+    assert(ChDdl.execute(spark, "SELECT x FROM bb").get
+      .collect().map(_.getLong(0)).toSeq === Seq(7L))
+    ChDdl.execute(spark, "DROP TABLE bb")
+    ChDdl.execute(spark, "DROP TABLE bd")
+  }
 }

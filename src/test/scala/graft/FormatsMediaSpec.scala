@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Media
 import graft.sources.Formats
+import graft.sql.ChDdl
 
 class FormatsMediaSpec extends SparkSpec {
   import spark.implicits._
@@ -35,10 +36,11 @@ class FormatsMediaSpec extends SparkSpec {
   }
 
   test("Pretty and Vertical render") {
-    val df = Seq((1, "a")).toDF("k", "v")
-    val p = Formats.pretty(df)
+    def rendered(format: String): String =
+      ChDdl.executeRendered(spark, s"SELECT 1 AS k, 'a' AS v FORMAT $format").get
+    val p = rendered("PrettyCompact")
     assert(p.contains("│") && p.contains("┌") && p.contains("a"))
-    val v = Formats.vertical(df)
+    val v = rendered("Vertical")
     assert(v.contains("Row 1:") && v.contains("k: 1"))
   }
 
@@ -65,13 +67,21 @@ class FormatsMediaSpec extends SparkSpec {
     import graft.sources.Formats
     val df = spark.sql("SELECT 1 AS a, 'x\ty' AS b UNION ALL SELECT 2, 'z' ORDER BY a")
     assert(Formats.tskv(df) === "a=1\tb=x\\ty\na=2\tb=z")
-    val wnt = Formats.tabSeparatedWithNames(df, withTypes = true)
-    assert(wnt.linesIterator.toSeq.take(2) === Seq("a\tb", "Int32\tString"))
-    val j = Formats.json(df)
-    assert(j.contains(""""meta":[{"name":"a","type":"Int32"}""") &&
+    // the same rows through the dialect renderer
+    def rendered(format: String): String = ChDdl.executeRendered(spark,
+      "SELECT 1 AS a, 'x\ty' AS b UNION ALL SELECT 2 AS a, 'z' AS b " +
+        s"ORDER BY a FORMAT $format").get
+    val wnt = rendered("TabSeparatedWithNamesAndTypes")
+    assert(wnt.linesIterator.toSeq.take(2) === Seq("a\tb", "UInt8\tString"))
+    val j = rendered("JSON").replaceAll("\\s+", "")
+    assert(j.contains(""""meta":[{"name":"a","type":"UInt8"}""") &&
       j.contains(""""rows":2""") && j.contains("""{"a":1,"b":"x\ty"}"""), j)
-    assert(Formats.jsonCompact(df).contains("[1,\"x\\ty\"]"))
-    val x = Formats.xml(df)
+    assert(rendered("JSONCompact").contains("[1, \"x\\ty\"]"))
+    // a Nullable 64-bit integer quotes the way its nested type does
+    Seq(Some(5L), None).toDF("n").createOrReplaceTempView("fmt_nullable")
+    assert(ChDdl.executeRendered(spark, "SELECT n FROM fmt_nullable FORMAT JSONEachRow")
+      .contains("{\"n\":\"5\"}\n{\"n\":null}"))
+    val x = rendered("XML").replaceAll("\\s+", "")
     assert(x.contains("<row><a>1</a>") && x.contains("<rows>2</rows>"), x)
     // RowBinary: Int32 LE + varint-length string bytes
     val bin = Formats.rowBinary(df)

@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.types._
 
 import graft.server.HttpEndpoint
-import graft.sources.{Formats, InputFormats}
+import graft.sources.InputFormats
 import graft.sql.ChDdl
 
 /** Pins for the ENGINE-RELEVANT `.sh` reference tests
@@ -27,8 +27,14 @@ class ShCorpusSpec extends SparkSpec {
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$corpus/$name.reference")), UTF_8)
 
-  private def tsv(df: org.apache.spark.sql.DataFrame): String =
-    Formats.tabSeparated(df) + "\n"
+  /** `df` the way the dialect prints `SELECT *` over it in `format`. */
+  private def rendered(df: org.apache.spark.sql.DataFrame,
+      format: String = "TabSeparated"): String = {
+    df.createOrReplaceTempView("sh_out")
+    ChDdl.executeRendered(spark, s"SELECT * FROM sh_out FORMAT $format").getOrElse("")
+  }
+
+  private def tsv(df: org.apache.spark.sql.DataFrame): String = rendered(df) + "\n"
 
   // ----- input formats ----------------------------------------------
 
@@ -120,11 +126,11 @@ class ShCorpusSpec extends SparkSpec {
     def block(outIdx: Int, inIdx: Int): Seq[String] =
       lines.slice(outIdx * 11 + inIdx * 2, outIdx * 11 + inIdx * 2 + 2)
     dfs.zipWithIndex.foreach { case (df, i) =>
-      assert(Formats.tabSeparated(df).split("\n", -1).toSeq === block(0, i),
+      assert(rendered(df).split("\n", -1).toSeq === block(0, i),
         s"TSV out, input #$i")
-      assert(Formats.csv(df).split("\n", -1).toSeq === block(1, i),
+      assert(rendered(df, "CSV").split("\n", -1).toSeq === block(1, i),
         s"CSV out, input #$i")
-      assert(Formats.jsonEachRow(df).split("\n", -1).toSeq === block(2, i),
+      assert(rendered(df, "JSONEachRow").split("\n", -1).toSeq === block(2, i),
         s"JSONEachRow out, input #$i")
     }
   }
