@@ -11,10 +11,12 @@ import graft.types.ChTypes
   * InterpreterFactory.cpp dispatch): CREATE TABLE … ENGINE=…, INSERT
   * VALUES / INSERT SELECT, OPTIMIZE TABLE (engine fold), DROP TABLE,
   * plus SELECT delegation to [[ChSql]]. Tables live in a session-
-  * scoped in-memory catalog registered as temp views (the Memory
-  * engine; MergeTree variants carry their fold Spec so OPTIMIZE
-  * applies the merge semantics, leaving one folded in-memory part that
-  * FINAL reads without folding again).
+  * scoped in-memory catalog registered as temp views, and a table is
+  * its materialized parts: each INSERT writes its block once (sorted by
+  * the primary key for MergeTree variants), and reads, FINAL and
+  * OPTIMIZE take the stored blocks. MergeTree variants carry their fold
+  * Spec so OPTIMIZE applies the merge semantics, leaving one folded
+  * part that FINAL reads without folding again.
   */
 object ChDdl {
 
@@ -43,7 +45,12 @@ object ChDdl {
       var blockSizes: Option[Vector[Long]] = Some(Vector.empty),
       // the (df, spec) OPTIMIZE left: while both are still current the
       // table is one folded part and FINAL reads it as is
-      var optimized: Option[(DataFrame, Spec)] = None)
+      var optimized: Option[(DataFrame, Spec)] = None,
+      // the parts INSERT and OPTIMIZE left, in insert order, and the
+      // relation over them they set `df` to (see storeParts); once
+      // another writer reassigns `df`, the next INSERT takes that df as
+      // its first part
+      var parts: Option[(Vector[DataFrame], DataFrame)] = None)
 
   /** Buffer-engine tables → their destination (StorageBuffer). */
   private val bufferDest =
@@ -263,6 +270,7 @@ object ChDdl {
       tables.values.filter(e => e.zkPath.contains(zk) && (e ne entry))
         .foreach { peer =>
           peer.df = entry.df
+          peer.parts = entry.parts
           // schema changes replicate too (ALTER on r1, DESCRIBE on r2
           // — corpus 00062)
           peer.colTypes = entry.colTypes
@@ -314,6 +322,38 @@ object ChDdl {
         case _ => qcol(f.name)
       }
     }.toIndexedSeq: _*)
+  }
+
+  /** A part's rows: a checkpoint's blocks as stored; any other part
+    * (OPTIMIZE's filtered fold) through its planned RDD. */
+  private def rowsOf(part: DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    part.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      case _ => part.queryExecution.toRdd
+    }
+
+  /** Make `parts` the table: `df` becomes one relation over their rows in
+    * insert order, sized as their sum. Parts of at most one partition
+    * (every key-sorted INSERT) read as one partition: one task per read
+    * and no exchange. */
+  private def storeParts(spark: SparkSession, entry: Entry,
+      parts: Vector[DataFrame]): Unit = {
+    import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val table =
+      if (parts.size == 1) parts.head
+      else {
+        val rdds = parts.map(rowsOf)
+        val single = rdds.forall(_.getNumPartitions <= 1)
+        val union = spark.sparkContext.union(rdds)
+        Bridge.rddRelation(spark, Bridge.unionSchema(parts.map(_.schema)),
+          if (single) union.coalesce(1) else union,
+          if (single) SinglePartition else UnknownPartitioning(0),
+          parts.map(_.queryExecution.analyzed.stats.sizeInBytes).sum)
+      }
+    entry.df = withDeclaredMeta(table, entry.colTypes)
+    entry.parts = Some((parts, entry.df))
   }
 
   /** A table by its given, USE-db-qualified or `default.`-stripped
@@ -2340,6 +2380,7 @@ object ChDdl {
       zkPath.foreach { zk =>
         tables.values.find(e => e.zkPath.contains(zk)).foreach { peer =>
           entry.df = peer.df
+          entry.parts = peer.parts
         }
       }
       tables.put(name, entry)
@@ -2780,24 +2821,31 @@ object ChDdl {
         // Join(ANY, …) folds at insert: a key already in the prebuilt
         // map keeps its FIRST row; within the incoming block the
         // first occurrence wins (block is a single in-order partition)
-        joinAnyTables.get(entry.name) match {
+        val block = joinAnyTables.get(entry.name) match {
           case Some(keys) =>
-            val firstPerBlock = sorted.coalesce(1).dropDuplicates(keys)
-            entry.df = entry.df.unionByName(
-              firstPerBlock.join(entry.df.select(keys.map(qcol).toIndexedSeq: _*),
-                keys.toIndexedSeq, "left_anti"))
-          case None =>
-            entry.df = entry.df.unionByName(sorted)
+            sorted.coalesce(1).dropDuplicates(keys).join(
+              entry.df.select(keys.map(qcol).toIndexedSeq: _*),
+              keys.toIndexedSeq, "left_anti")
+          case None => sorted
         }
+        // The part is written once: a lazy localCheckpoint runs no job
+        // here; the first read that reaches it fills its blocks, and
+        // later reads, FINAL and OPTIMIZE take them. A df another writer
+        // left (ALTER, ATTACH, Set's distinct) becomes the first part the
+        // same way. Limit: the blocks have no lineage to recompute them,
+        // so losing an executor loses the table.
+        val part = block.localCheckpoint(eager = false)
+        val prior = entry.parts.collect { case (ps, df) if df eq entry.df => ps }
+          .getOrElse(Vector(entry.df.localCheckpoint(eager = false)))
+        storeParts(spark, entry, prior :+ part)
         // StorageSet::insertBlock folds each block into a unique set
         if (setTables.contains(entry.name)) entry.df = entry.df.distinct()
-        entry.df = withDeclaredMeta(entry.df, entry.colTypes)
         entry.df.createOrReplaceTempView(entry.view)
         syncReplicas(entry)
         // replicated inserts register their part names (min/max date +
         // group block number) for system.parts / system.zookeeper /
         // ATTACH PART
-        entry.zkPath.foreach(zk => registerZkParts(zk, entry, sorted))
+        entry.zkPath.foreach(zk => registerZkParts(zk, entry, part))
         // buffers over this destination see the new data immediately
         tables.values.filter(e =>
           bufferDest.get(e.name).contains(entry.name)).foreach { b =>
@@ -3126,11 +3174,11 @@ object ChDdl {
     // this catalog: the fold's groups (Summing's before its all-zero
     // edge) sorted by the sort key (MergeTreeTable.write's part layout;
     // a Collapsing key's first -1 row stays before its last +1 row), in
-    // a localCheckpoint that also cuts the per-INSERT union lineage. The
-    // job that fills it counts all rows and Summing's surviving groups;
-    // if none survived, the part is the last group by key, picked by the
-    // only other job. Limit: the blocks have no lineage to recompute
-    // them, so losing an executor loses the table.
+    // a localCheckpoint that becomes the table's only part. The job that
+    // fills it reads the inserted parts' blocks and counts all rows and
+    // Summing's surviving groups; if none survived, the part is the last
+    // group by key, picked by the only other job. Limit: the blocks have
+    // no lineage to recompute them, so losing an executor loses the table.
     val order = entry.spec.sortKey ++ (entry.spec.engine match {
       case MergeTreeTable.Collapsing(sign) => Seq(sign)
       case _ => Nil
@@ -3142,8 +3190,7 @@ object ChDdl {
     val keepAt = groups.columns.indexOf(KeepCol)
     // count over the checkpointed RDD itself: an RDD derived from a plan
     // of `groups` would keep the inserted rows alive with the table
-    val (rows, survivors) = groups.queryExecution.logical
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    val (rows, survivors) = rowsOf(groups)
       .map(r => (1L,
         if (keepAt < 0 || (!r.isNullAt(keepAt) && r.getBoolean(keepAt))) 1L else 0L))
       .fold((0L, 0L)) { case ((n, k), (pn, pk)) => (n + pn, k + pk) }
@@ -3153,7 +3200,7 @@ object ChDdl {
         (groups.filter(qcol(KeepCol)).drop(KeepCol, KeyCol), survivors)
       else (spark.createDataFrame(java.util.Arrays.asList(groups.orderBy(
         qcol(KeyCol).desc).head()), groups.schema).drop(KeepCol, KeyCol), 1L)
-    entry.df = withDeclaredMeta(part, entry.colTypes)
+    storeParts(spark, entry, Vector(part))
     // the block/part structure collapses to a single run of its rows
     entry.blockSizes = Some(Vector(partRows))
     // Graphite's rollup depends on the time of the fold: FINAL always

@@ -40,4 +40,32 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** DataFrame over rows already in Spark's internal format, declaring
+    * their partitioning and size — the classic LogicalRDD, whose
+    * constructor takes the classic session (createDataFrame declares
+    * neither). */
+  def rddRelation(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      partitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning,
+      sizeInBytes: BigInt): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+      rdd, partitioning)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes))))
+
+  /** The schema of a positional UNION ALL of these schemas (Union's
+    * output): the first's names and metadata, types widened by
+    * nullability — StructType.unionLikeMerge is private[sql]. */
+  def unionSchema(schemas: Seq[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      schemas.map(_.fields.toSeq).transpose.map { fs =>
+        fs.head.copy(
+          dataType = fs.map(_.dataType)
+            .reduce(org.apache.spark.sql.types.StructType.unionLikeMerge),
+          nullable = fs.exists(_.nullable))
+      })
 }

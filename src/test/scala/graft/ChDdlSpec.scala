@@ -268,6 +268,110 @@ class ChDdlSpec extends SparkSpec {
   private def rows(sql: String): Seq[String] =
     ChDdl.execute(spark, sql).get.collect().map(_.mkString("|")).toSeq
 
+  /** `rows`, with arrays spelled [a,b]. */
+  private def cells(sql: String): Seq[String] =
+    ChDdl.execute(spark, sql).get.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq
+
+  test("parts read in insert order, each sorted by the key") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark,
+      "CREATE TABLE po (d Date, k UInt32, v String) ENGINE = MergeTree(d, k, 8192)")
+    Seq("('2020-01-01', 3, 'a'), ('2020-01-01', 1, 'b'), ('2020-01-01', 2, 'c')",
+      "('2020-02-01', 9, 'd'), ('2020-01-01', 5, 'e')",
+      "('2020-01-01', 7, 'f'), ('2020-02-01', 0, 'g'), ('2020-01-01', 4, 'h')")
+      .foreach(vs => ChDdl.execute(spark, s"INSERT INTO po VALUES $vs"))
+    val order = "SELECT groupArray(k), groupArray(v) FROM po"
+    assert(cells(order) === Seq("[1,2,3,5,9,4,7,0]|[b,c,a,e,d,h,f,g]"))
+    assert(rows("SELECT k, blockSize(), _part_index FROM po ORDER BY k") === Seq(
+      "0|3|2", "1|3|0", "2|3|0", "3|3|0", "4|3|2", "5|2|1", "7|3|2", "9|2|1"))
+    // DETACH parks the month; ATTACH appends it after the rest, and the
+    // next INSERT reads behind both
+    ChDdl.execute(spark, "ALTER TABLE po DETACH PARTITION 202002")
+    assert(cells(order) === Seq("[1,2,3,5,4,7]|[b,c,a,e,h,f]"))
+    ChDdl.execute(spark, "ALTER TABLE po ATTACH PARTITION 202002")
+    assert(cells(order) === Seq("[1,2,3,5,4,7,9,0]|[b,c,a,e,h,f,d,g]"))
+    // a column added between INSERTs reads its default in older parts
+    ChDdl.execute(spark, "ALTER TABLE po ADD COLUMN w UInt32")
+    ChDdl.execute(spark, "INSERT INTO po VALUES ('2020-01-01', 8, 'i', 80), " +
+      "('2020-01-01', 6, 'j', 60)")
+    assert(cells("SELECT groupArray(k), groupArray(w) FROM po") ===
+      Seq("[1,2,3,5,4,7,9,0,6,8]|[0,0,0,0,0,0,0,0,60,80]"))
+    ChDdl.execute(spark, "DROP TABLE po")
+  }
+
+  test("Buffer and replica reads see the destination's parts in order") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark, "CREATE TABLE pd (d Date, k UInt32) ENGINE = MergeTree(d, k, 8192)")
+    ChDdl.execute(spark, "CREATE TABLE pb (d Date, k UInt32) ENGINE = " +
+      "Buffer(default, pd, 1, 10, 100, 10000, 1000000, 10000000, 100000000)")
+    ChDdl.execute(spark, "INSERT INTO pd VALUES ('2020-01-01', 3), ('2020-01-01', 1)")
+    ChDdl.execute(spark, "INSERT INTO pb VALUES ('2020-01-01', 2), ('2020-01-01', 0)")
+    Seq("pb", "pd").foreach(t =>
+      assert(cells(s"SELECT groupArray(k) FROM $t") === Seq("[1,3,0,2]"), t))
+    Seq("r1", "r2").foreach(r => ChDdl.execute(spark, s"CREATE TABLE p$r (d Date, k UInt32) " +
+      s"ENGINE = ReplicatedMergeTree('/clickhouse/tables/po', '$r', d, k, 8192)"))
+    ChDdl.execute(spark, "INSERT INTO pr1 VALUES ('2020-01-01', 3), ('2020-02-01', 1), " +
+      "('2020-01-01', 2)")
+    ChDdl.execute(spark, "INSERT INTO pr2 VALUES ('2020-01-01', 0), ('2020-01-01', 5)")
+    ChDdl.execute(spark, "INSERT INTO pr1 VALUES ('2020-02-01', 4)")
+    Seq("pr1", "pr2").foreach(t =>
+      assert(cells(s"SELECT groupArray(k) FROM $t") === Seq("[2,3,1,0,5,4]"), t))
+    assert(rows("SELECT name FROM system.parts WHERE table = 'pr2' ORDER BY name") === Seq(
+      "20200101_20200101_200_200_0", "20200101_20200101_201_201_0",
+      "20200201_20200201_200_200_0", "20200201_20200201_201_201_0"))
+    // the detached parts come back as the slices their INSERTs stored
+    ChDdl.execute(spark, "ALTER TABLE pr1 DETACH PARTITION 202002")
+    assert(cells("SELECT groupArray(k) FROM pr1") === Seq("[2,3,0,5]"))
+    ChDdl.execute(spark, "ALTER TABLE pr1 ATTACH PARTITION 202002")
+    assert(cells("SELECT groupArray(k) FROM pr1") === Seq("[2,3,0,5,1,4]"))
+    ChDdl.reset(spark)
+  }
+
+  test("a read scans the stored part: the INSERT's plan does not run again") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark,
+      "CREATE TABLE big (d Date, k UInt64, s String) ENGINE = MergeTree(d, k, 8192)")
+    ChDdl.execute(spark, "INSERT INTO big SELECT toDate('2024-01-01'), number, " +
+      "toString(number) FROM system.numbers LIMIT 200000")
+    val q = "SELECT count(), sum(k) FROM big"
+    assert(rows(q) === Seq("200000|19999900000"))
+    val again = ChDdl.execute(spark, q).get
+    assert(again.collect().map(_.mkString("|")).toSeq === Seq("200000|19999900000"))
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def names(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => names(a.executedPlan)
+      case s: QueryStageExec => names(s.plan)
+      case _ => p.nodeName +: p.children.flatMap(names)
+    }
+    val plan = names(again.queryExecution.executedPlan)
+    assert(plan.intersect(Seq("Range", "Sort", "LocalTableScan")).isEmpty,
+      again.queryExecution.executedPlan.toString)
+    ChDdl.execute(spark, "DROP TABLE big")
+  }
+
+  test("a table's plan does not grow with its INSERTs") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark,
+      "CREATE TABLE grow (d Date, k UInt32, v Int32) ENGINE = SummingMergeTree(d, k, 8192)")
+    def insert(i: Int): Unit =
+      ChDdl.execute(spark, s"INSERT INTO grow VALUES ('2020-01-01', $i, 1)")
+    def nodes: Int = ChDdl.execute(spark, "SELECT k, v FROM grow").get
+      .queryExecution.analyzed.collect { case p => p }.size
+    // an empty part reads as no rows
+    ChDdl.execute(spark, "INSERT INTO grow SELECT toDate('2020-01-01'), 1, 1 WHERE 0")
+    assert(ChDdl.execute(spark, "SELECT k FROM grow").get.count() === 0L)
+    insert(0)
+    val one = nodes
+    (1 until 8).foreach(insert)
+    assert(nodes === one)
+    assert(rows("SELECT count(), sum(k) FROM grow") === Seq("8|28"))
+    ChDdl.execute(spark, "DROP TABLE grow")
+  }
+
   /** Whether FINAL's analyzed plan still folds (an Aggregate). */
   private def finalFolds(sql: String): Boolean =
     ChDdl.execute(spark, sql).get.queryExecution.analyzed.collectFirst {
@@ -305,8 +409,9 @@ class ChDdlSpec extends SparkSpec {
     val rep = finalStableUnderOptimize(
       "CREATE TABLE fr (d Date, k UInt32, ver UInt32, v String) " +
         "ENGINE = ReplacingMergeTree(d, k, 8192, ver)",
-      Seq("INSERT INTO fr VALUES ('2020-01-01', 1, 1, 'old'), ('2020-01-01', 2, 5, 'keep')",
-        "INSERT INTO fr VALUES ('2020-01-01', 1, 2, 'new'), ('2020-01-01', 2, 5, 'tie-last')"),
+      Seq("INSERT INTO fr VALUES ('2020-01-01', 2, 5, 'keep'), ('2020-01-01', 1, 1, 'old')",
+        "INSERT INTO fr VALUES ('2020-01-01', 2, 5, 'tie'), ('2020-01-01', 1, 2, 'new')",
+        "INSERT INTO fr VALUES ('2020-01-01', 2, 5, 'tie-last'), ('2020-01-01', 1, 0, 'older')"),
       "fr")(from => s"SELECT k, ver, v FROM $from ORDER BY k")
     assert(rep === Seq("1|2|new", "2|5|tie-last"))
   }
