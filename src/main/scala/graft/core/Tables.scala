@@ -31,8 +31,7 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
+    val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case LongType =>
         // integer division: `/` would promote to double, whose 256 ns ulp
@@ -43,29 +42,6 @@ object Tables {
         // DateTime semantics read, so reinterpret in the session zone (UTC)
         df.withColumn("ts", col("ts").cast(TimestampType))
     } else df
-  }
-
-  /** Inferred schema per dataset path, with the latest modification
-    * time of its files when it was inferred. */
-  private val schemas =
-    scala.collection.concurrent.TrieMap[String, (Long, org.apache.spark.sql.types.StructType)]()
-
-  /** The dataset's schema, inferred (a Spark job reading parquet
-    * footers) only when its files changed since the last inference. */
-  private def schemaOf(spark: SparkSession, path: String)
-      : org.apache.spark.sql.types.StructType = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var stamp = fs.getFileStatus(p).getModificationTime
-    val files = fs.listFiles(p, true)
-    while (files.hasNext) stamp = stamp max files.next().getModificationTime
-    schemas.get(path) match {
-      case Some((t, s)) if t == stamp => s
-      case _ =>
-        val s = spark.read.parquet(path).schema
-        schemas.put(path, (stamp, s))
-        s
-    }
   }
 
   /** Register every table as a temp view (the `Database` analog). */

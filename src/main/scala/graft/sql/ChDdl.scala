@@ -333,6 +333,20 @@ object ChDdl {
       case _ => part.queryExecution.toRdd
     }
 
+  /** Coalesces all of an RDD's partitions into one, in index order, even
+    * when there are none. The default coalescer starts from a partition
+    * with a preferred location, so a part selected from cached blocks
+    * would read before the older parts that have no location yet. */
+  private object InIndexOrder extends org.apache.spark.rdd.PartitionCoalescer
+      with Serializable {
+    def coalesce(maxPartitions: Int, parent: org.apache.spark.rdd.RDD[_])
+        : Array[org.apache.spark.rdd.PartitionGroup] = {
+      val group = new org.apache.spark.rdd.PartitionGroup()
+      group.partitions ++= parent.partitions
+      Array(group)
+    }
+  }
+
   /** Make `parts` the table: `df` becomes one relation over their rows in
     * insert order, sized as their sum. Parts of at most one partition
     * (every key-sorted INSERT) read as one partition: one task per read
@@ -348,7 +362,7 @@ object ChDdl {
         val single = rdds.forall(_.getNumPartitions <= 1)
         val union = spark.sparkContext.union(rdds)
         Bridge.rddRelation(spark, Bridge.unionSchema(parts.map(_.schema)),
-          if (single) union.coalesce(1) else union,
+          if (single) union.coalesce(1, shuffle = false, Some(InIndexOrder)) else union,
           if (single) SinglePartition else UnknownPartitioning(0),
           parts.map(_.queryExecution.analyzed.stats.sizeInBytes).sum)
       }
@@ -2828,12 +2842,16 @@ object ChDdl {
               keys.toIndexedSeq, "left_anti")
           case None => sorted
         }
-        // The part is written once: a lazy localCheckpoint runs no job
-        // here; the first read that reaches it fills its blocks, and
-        // later reads, FINAL and OPTIMIZE take them. A df another writer
-        // left (ALTER, ATTACH, Set's distinct) becomes the first part the
-        // same way. Limit: the blocks have no lineage to recompute them,
-        // so losing an executor loses the table.
+        // The part is written once: the first read that reaches its lazy
+        // localCheckpoint fills its blocks, and later reads, FINAL and
+        // OPTIMIZE take them. A block whose plan has no exchange (VALUES,
+        // a scan, the sort) runs no job here; one with an exchange (a
+        // GROUP BY or join in the SELECT, Join(ANY)'s anti-join) runs its
+        // shuffle stages here, as AQE plans them when the checkpoint asks
+        // for the RDD. A df another writer left (ALTER, ATTACH, Set's
+        // distinct) becomes the first part the same way. Limit: the
+        // blocks have no lineage to recompute them, so losing an executor
+        // loses the table.
         val part = block.localCheckpoint(eager = false)
         val prior = entry.parts.collect { case (ps, df) if df eq entry.df => ps }
           .getOrElse(Vector(entry.df.localCheckpoint(eager = false)))

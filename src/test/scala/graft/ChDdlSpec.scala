@@ -372,6 +372,45 @@ class ChDdlSpec extends SparkSpec {
     ChDdl.execute(spark, "DROP TABLE grow")
   }
 
+  test("a table of empty INSERTs counts 0 rows") {
+    ChDdl.reset(spark)
+    // Memory parts are not coalesced, so an empty one has no partition
+    ChDdl.execute(spark, "CREATE TABLE none (d Date, k UInt32) ENGINE = Memory")
+    (1 to 2).foreach(_ => ChDdl.execute(spark,
+      "INSERT INTO none SELECT toDate('2020-01-01'), 1 WHERE 0"))
+    // Spark's keyless aggregate gives one row over no input; the
+    // dialect's gives none (the reference's empty-input aggregate)
+    val table = ChDdl.execute(spark, "SELECT k FROM none").get
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    assert(table.agg(count(lit(1)), sum("k")).collect().map(_.mkString("|")).toSeq ===
+      Seq("0|null"))
+    assert(rows("SELECT count() FROM none") === Nil)
+    ChDdl.execute(spark, "DROP TABLE none")
+  }
+
+  test("a part whose source blocks are cached still reads after older parts") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark, "CREATE TABLE src (d Date, k UInt32, ver UInt32, v String) " +
+      "ENGINE = MergeTree(d, k, 8192)")
+    ChDdl.execute(spark, "INSERT INTO src VALUES ('2020-01-01', 9, 1, 's9'), " +
+      "('2020-01-01', 2, 5, 'from-src')")
+    // the first read fills src's blocks and the second sees where they
+    // are, so a part selected from src has a preferred location while
+    // the VALUES part before it has none
+    (1 to 2).foreach(_ => assert(rows("SELECT count() FROM src") === Seq("2")))
+    ChDdl.execute(spark, "CREATE TABLE dst (d Date, k UInt32, ver UInt32, v String) " +
+      "ENGINE = ReplacingMergeTree(d, k, 8192, ver)")
+    ChDdl.execute(spark, "INSERT INTO dst VALUES ('2020-01-01', 2, 5, 'values'), " +
+      "('2020-01-01', 1, 1, 'v1')")
+    ChDdl.execute(spark, "INSERT INTO dst SELECT d, k, ver, v FROM src")
+    assert(cells("SELECT groupArray(k), groupArray(v) FROM dst") ===
+      Seq("[1,2,2,9]|[v1,values,from-src,s9]"))
+    // equal versions: the last insert wins
+    assert(rows("SELECT k, v FROM dst FINAL ORDER BY k") ===
+      Seq("1|v1", "2|from-src", "9|s9"))
+    ChDdl.reset(spark)
+  }
+
   /** Whether FINAL's analyzed plan still folds (an Aggregate). */
   private def finalFolds(sql: String): Boolean =
     ChDdl.execute(spark, sql).get.queryExecution.analyzed.collectFirst {

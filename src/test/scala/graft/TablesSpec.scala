@@ -36,51 +36,6 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `body` starts: job starts a listener sees before those
-    * of a marker job run after `body` (the bus delivers them in order). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = "tables-spec-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  test("a dataset's schema is inferred once until its files change") {
-    val dir = java.nio.file.Files.createTempDirectory("tables-spec").toFile
-    try {
-      val path = s"$dir/documents.parquet"
-      spark.range(5).selectExpr("id", "cast(id AS string) AS s")
-        .write.parquet(path)
-      val first = graft.core.Tables(spark, dir.toString, "documents")
-      val rows = first.collect().toSeq.map(_.toString).sorted
-      val (again, jobs) = jobsDuring(graft.core.Tables(spark, dir.toString, "documents"))
-      assert(jobs === 0)
-      assert(again.schema === first.schema)
-      assert(again.collect().toSeq.map(_.toString).sorted === rows)
-      // rewritten at the same path: the new files' schema is read
-      spark.range(3).selectExpr("id", "id * 2 AS twice")
-        .write.mode("overwrite").parquet(path)
-      val rewritten = graft.core.Tables(spark, dir.toString, "documents")
-      assert(rewritten.columns.toSeq === Seq("id", "twice"))
-      assert(rewritten.collect().map(_.getLong(1)).sorted.toSeq === Seq(0L, 2L, 4L))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
   test("all catalog tables read and are non-empty at sf0.001") {
     graft.core.Tables.names.foreach { n =>
       val df = graft.core.Tables(spark, sfDir, n)
