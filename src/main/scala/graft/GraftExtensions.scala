@@ -42,6 +42,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (the Aggregator.cpp specialization) instead of the generic
     // ObjectHashAggregate per-row path — bit-identical results
     ext.injectPlannerStrategy(_ => graft.operators.SketchAggStrategy)
+    // a parquet scan of at most 20 × 8192 rows reads as one split, so
+    // the aggregate, sort or window above it plans no exchange (the
+    // reference's merge_tree_min_rows_for_concurrent_read)
+    ext.injectQueryPostPlannerStrategyRule(s => graft.operators.SingleSplitScan(s))
   }
 }
 

@@ -59,6 +59,16 @@ object Bpe {
     parts
   }
 
+  /** A word's output tokens: [[encodeWord]]'s symbols without a
+    * standalone trailing [[Eow]]. A last symbol that never merged with
+    * the marker leaves it alone at the end; it marks the word boundary,
+    * not a token, and subword-nmt's `apply_bpe` drops it too. */
+  private def wordTokens(word: String, ranks: Map[(String, String), Int]): List[String] =
+    encodeWord(word, ranks) match {
+      case syms if syms.last == Eow => syms.init
+      case syms => syms
+    }
+
   /** Learn `nMerges` merges from a word-frequency table (classic BPE
     * training loop; ties: highest count, then smallest pair). */
   def train(wordFreq: Map[String, Long], nMerges: Int): Seq[(String, String)] = {
@@ -118,7 +128,7 @@ object Bpe {
   // ------- per-row kernels (called from codegen'd expressions) -------
 
   /** Compiled spec: parsed ranks plus a PER-TASK word→tokens memo.
-    * `encodeWord` is a pure function of (word, ranks), and natural
+    * `wordTokens` is a pure function of (word, ranks), and natural
     * text is Zipf-distributed — the same few thousand words repeat
     * throughout a corpus — so memoizing turns the greedy merge loop
     * into a hash probe for most word instances (what production
@@ -148,7 +158,7 @@ object Bpe {
       val hit = m.map.get(w)
       if (hit != null) hit
       else {
-        val r = encodeWord(w, ranks)
+        val r = wordTokens(w, ranks)
         if (m.map.size < (1 << 16)) m.map.put(w, r)
         r
       }

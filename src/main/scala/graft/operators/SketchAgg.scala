@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -678,6 +678,14 @@ private[operators] final class GroupKeyMap(
 private[operators] trait SketchAggExecBase extends UnaryExecNode {
   def keys: Seq[NamedExpression]
   def aggs: Seq[AggregateExpression]
+
+  /** A one-partition input (a single-split scan) stays one partition,
+    * so the final step needs no exchange and the operators above it
+    * none either. */
+  override def outputPartitioning: Partitioning = child.outputPartitioning match {
+    case SinglePartition => SinglePartition
+    case _ => UnknownPartitioning(0)
+  }
 
   /** Keyed shapes ship packed blobs (see [[SketchAgg.PackBuckets]]);
     * keyless aggregation has one partial row per task, nothing to pack. */

@@ -333,20 +333,6 @@ object ChDdl {
       case _ => part.queryExecution.toRdd
     }
 
-  /** Coalesces all of an RDD's partitions into one, in index order, even
-    * when there are none. The default coalescer starts from a partition
-    * with a preferred location, so a part selected from cached blocks
-    * would read before the older parts that have no location yet. */
-  private object InIndexOrder extends org.apache.spark.rdd.PartitionCoalescer
-      with Serializable {
-    def coalesce(maxPartitions: Int, parent: org.apache.spark.rdd.RDD[_])
-        : Array[org.apache.spark.rdd.PartitionGroup] = {
-      val group = new org.apache.spark.rdd.PartitionGroup()
-      group.partitions ++= parent.partitions
-      Array(group)
-    }
-  }
-
   /** Make `parts` the table: `df` becomes one relation over their rows in
     * insert order, sized as their sum. Parts of at most one partition
     * (every key-sorted INSERT) read as one partition: one task per read
@@ -362,7 +348,8 @@ object ChDdl {
         val single = rdds.forall(_.getNumPartitions <= 1)
         val union = spark.sparkContext.union(rdds)
         Bridge.rddRelation(spark, Bridge.unionSchema(parts.map(_.schema)),
-          if (single) union.coalesce(1, shuffle = false, Some(InIndexOrder)) else union,
+          if (single) union.coalesce(1, shuffle = false,
+            Some(graft.operators.InIndexOrder)) else union,
           if (single) SinglePartition else UnknownPartitioning(0),
           parts.map(_.queryExecution.analyzed.stats.sizeInBytes).sum)
       }

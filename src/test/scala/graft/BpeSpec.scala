@@ -45,6 +45,25 @@ class BpeSpec extends SparkSpec {
     assert(r.getSeq[String](1) === Seq("low", "est</w>"))
   }
 
+  test("a word's unmerged end-of-word marker is no token: n_words <= tokens <= characters") {
+    graft.GraftFunctions.register(spark)
+    // 8 words, 33 alphanumeric characters; under these merges no word's
+    // last symbol joins the marker, which once counted 41 tokens
+    val doc = "group table a big the vector table group"
+    val words = doc.split(' ').length.toLong
+    val chars = doc.count(_.isLetterOrDigit).toLong
+    for (spec <- Seq("", Bpe.render(Bpe.train(freqs, 5)),
+        Bpe.render(Bpe.train(doc.split(' ').groupMapReduce(identity)(_ => 1L)(_ + _), 12)))) {
+      val n = spark.sql(s"SELECT bpe_token_count('$doc', '$spec') AS n").head().getLong(0)
+      assert(n === Bpe.tokenCount(doc, spec))
+      assert(words <= n && n <= chars, s"$n tokens under '$spec'")
+      val toks = Bpe.encode(doc, spec)
+      assert(toks.length.toLong === n)
+      assert(!toks.contains(Bpe.Eow), toks.mkString(","))
+    }
+    assert(Bpe.tokenCount(doc, "") === chars)
+  }
+
   test("corpus: codegen kernel output equals the driver-side encoder on sf0.001 documents") {
     graft.GraftFunctions.register(spark)
     val docs = graft.core.Tables(spark, sfDir, "documents")

@@ -8,7 +8,9 @@ package graft
   * Bloom-prefiltered joins, BPE training, window idioms, and the
   * mixing/replication family) re-runs with a different
   * `spark.sql.shuffle.partitions` and must return byte-identical
-  * rows. Trained-model queries (k-means paths) are excluded by
+  * rows, and once more with every scan spread over the cores
+  * (`spark.sql.files.minPartitionNum`) where it would read as one
+  * split. Trained-model queries (k-means paths) are excluded by
   * design: their float-reduction order is run-dependent and their
   * specs pin recall instead. */
 class PartitionInvarianceSpec extends SparkSpec {
@@ -38,12 +40,13 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q122_deterministic_sample",
     "q123_simhash_neardup")
 
+  private def run(name: String): Seq[String] =
+    SparkEntry.queries(name)(spark, sfDir)
+      .collect().map(_.toString).sorted.toSeq
+
   test("query results are invariant under a different shuffle width") {
     val key = "spark.sql.shuffle.partitions"
     val original = spark.conf.get(key)
-    def run(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, sfDir)
-        .collect().map(_.toString).sorted.toSeq
     try {
       names.foreach { name =>
         spark.conf.set(key, original)
@@ -54,5 +57,19 @@ class PartitionInvarianceSpec extends SparkSpec {
         assert(wide.nonEmpty, s"$name returned nothing at $sfDir")
       }
     } finally spark.conf.set(key, original)
+  }
+
+  test("query results are invariant under a spread scan") {
+    // the sf0.001 inputs read as one split by default (SingleSplitScan);
+    // an explicit minPartitionNum spreads them over the cores, so the
+    // multi-partition plans with their exchanges stay under test
+    val key = "spark.sql.files.minPartitionNum"
+    names.foreach { name =>
+      val single = run(name)
+      spark.conf.set(key, "4")
+      val spread = try run(name) finally spark.conf.unset(key)
+      assert(single === spread, s"$name changed under a spread scan")
+      assert(single.nonEmpty, s"$name returned nothing at $sfDir")
+    }
   }
 }

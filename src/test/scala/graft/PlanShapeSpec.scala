@@ -12,6 +12,68 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Runs `body` with every parquet scan spread over the session's
+    * cores: an explicit `spark.sql.files.minPartitionNum` keeps the
+    * single-split rule off, so pins on shuffle shapes still see the
+    * exchanges a multi-partition input plans. */
+  private def spreadScans[T](body: => T): T = {
+    val key = "spark.sql.files.minPartitionNum"
+    spark.conf.set(key, "4")
+    try body finally spark.conf.unset(key)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graftbridge.TestBridge.drainListeners(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** `rows` ids as parquet in `files` files: key `k`, value `id`. */
+  private def idsParquet(rows: Long, files: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("single_split").toString + "/t"
+    spark.range(0, rows, 1, files).selectExpr("id", "id % 97 AS k")
+      .write.parquet(dir)
+    dir
+  }
+
+  private def topKeys(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    df.groupBy("k").agg(count(lit(1)).as("c"), sum("id").as("s"))
+      .orderBy(desc("c"), desc("s")).limit(10)
+  }
+
+  test("a parquet input of at most 20 x 8192 rows reads as one split: no exchange, one job") {
+    val dir = idsParquet(100000, 8)
+    val df = topKeys(spark.read.parquet(dir))
+    val (rows, jobs) = jobsOf(df.collect().map(_.toString).toSeq)
+    val p = plan(df)
+    assert(p.contains("SingleSplitScan"), p)
+    assert(!p.contains("Exchange"), p)
+    assert(jobs === 1, p)
+    assert(rows === topKeys(spark.range(0, 100000).selectExpr("id", "id % 97 AS k"))
+      .collect().map(_.toString).toSeq)
+  }
+
+  test("a parquet input above 20 x 8192 rows keeps its exchanges and its rows") {
+    val dir = idsParquet(200000, 8)
+    val df = topKeys(spark.read.parquet(dir))
+    val rows = df.collect().map(_.toString).toSeq
+    val p = plan(df)
+    assert(!p.contains("SingleSplitScan"), p)
+    assert(p.contains("Exchange hashpartitioning"), p)
+    assert(rows === topKeys(spark.range(0, 200000).selectExpr("id", "id % 97 AS k"))
+      .collect().map(_.toString).toSeq)
+  }
+
   test("q70: filter and projection reach the parquet scan (PREWHERE effect)") {
     val p = plan(graft.queries.MiscQueries.q70(spark, sfDir))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), EqualTo(l_quantity,50.0)]"), p)
@@ -173,7 +235,7 @@ class PlanShapeSpec extends SparkSpec {
       (graft.queries.PipelineQueries.q108(spark, sfDir), "bpe_token_count"))) {
       // tree strings print children BELOW their parent, so everything
       // after the range-exchange line is the exchange's input subtree
-      val p = df.queryExecution.executedPlan.toString
+      val p = spreadScans(df.queryExecution.executedPlan.toString)
       val ex = p.indexOf("Exchange rangepartitioning")
       val kernel = p.indexOf(kernelMark)
       assert(ex >= 0 && kernel >= 0, p)
@@ -182,7 +244,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q97: graphite rollup is two keyed aggregations — no windows, 2 keyed shuffles") {
-    val p = plan(graft.queries.MergeTreeQueries.q97(spark, sfDir))
+    val p = spreadScans(plan(graft.queries.MergeTreeQueries.q97(spark, sfDir)))
     assert(!p.contains("Window"), p)
     // dedup pair (SortAggregate — max_by carries a struct buffer; the
     // reference's own merge is a sorted stream) + rollup pair
@@ -219,7 +281,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q105: normalize-dedup is one kernel call + ONE digest shuffle") {
-    val p = plan(graft.queries.PipelineQueries.q105(spark, sfDir))
+    val p = spreadScans(plan(graft.queries.PipelineQueries.q105(spark, sfDir)))
     assert(p.contains("normalize_for_dedup"), p)
     assert("hashpartitioning".r.findAllIn(p).size === 1, p)
   }
@@ -252,7 +314,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q110: cartography joins once on the id; rollups are partial/final") {
-    val p = plan(graft.queries.SimilarityQueries.q110(spark, sfDir))
+    val p = spreadScans(plan(graft.queries.SimilarityQueries.q110(spark, sfDir)))
     // cell assignment is narrow and FUSED (one ivf_cell node, not k
     // cosine_sim calls under array_max), no Generate
     assert(p.contains("ivf_cell"), p)
@@ -297,8 +359,8 @@ class PlanShapeSpec extends SparkSpec {
     // ReusedExchange, leaving exactly ONE decode MapPartitions
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val p = graft.queries.MultimodalQueries.q112(spark, sfDir)
-        .queryExecution.executedPlan.toString
+      val p = spreadScans(graft.queries.MultimodalQueries.q112(spark, sfDir)
+        .queryExecution.executedPlan.toString)
       val decodes = "MapPartitions".r.findAllIn(p).size
       assert(decodes === 1, s"q112 decode pass appears $decodes times:\n$p")
       assert(p.contains("ReusedExchange"), s"bucket exchange not reused:\n$p")

@@ -403,6 +403,22 @@ class SketchAggSpec extends SparkSpec {
     }
   }
 
+  test("single-split scan: partial and final run with no exchange between them") {
+    val dir = java.nio.file.Files.createTempDirectory("sa_single").toString + "/t"
+    base.select("k1", "u", "v").write.parquet(dir)
+    def scan = spark.read.parquet(dir)
+    for (mk <- Seq(
+        () => scan.groupBy("k1").agg(uniqCol("u").as("nu"), count(lit(1)).as("c")),
+        () => scan.agg(uniqCol("u").as("nu"), sum("v").as("s")))) {
+      val df = mk()
+      compare(df)
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("SingleSplitScan"), p)
+      assert(p.contains("PartialSketchAgg") && p.contains("FinalSketchAgg"), p)
+      assert(!p.contains("Exchange"), p)
+    }
+  }
+
   test("dialect uniq GROUP BY goes through SketchAgg (bench q9 shape)") {
     base.createOrReplaceTempView("sa_t")
     val df = sql.ChDdl.execute(spark,
