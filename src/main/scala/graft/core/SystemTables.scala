@@ -64,15 +64,16 @@ object SystemTables {
     // bounded stand-in for the infinite generator (LocalLimit stops it)
     spark.range(100000000L).toDF("number").createOrReplaceTempView("system_numbers")
 
-    spark.catalog.listTables().toDF()
+    // rows: decoding the typed catalog.Table fails under NO_CODEGEN
+    val tables = spark.catalog.listTables().toDF()
       .selectExpr("namespace", "name", "tableType", "isTemporary")
-      .createOrReplaceTempView("system_tables")
+    tables.createOrReplaceTempView("system_tables")
 
-    val cols = spark.catalog.listTables().collect()
-      .filter(t => t.name != "system_columns" && !t.name.startsWith("system_"))
+    val cols = tables.collect().map(_.getAs[String]("name"))
+      .filter(t => !t.startsWith("system_"))
       .flatMap { t =>
-        scala.util.Try(spark.table(t.name).schema.fields.map(f =>
-          (t.name, f.name, f.dataType.simpleString, f.nullable))).getOrElse(Array())
+        scala.util.Try(spark.table(t).schema.fields.map(f =>
+          (t, f.name, f.dataType.simpleString, f.nullable))).getOrElse(Array())
       }.toSeq
     cols.toDF("table", "name", "type", "nullable")
       .createOrReplaceTempView("system_columns")

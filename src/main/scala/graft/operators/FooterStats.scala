@@ -160,6 +160,17 @@ object FooterStats {
     } finally reader.close()
   }
 
+  /** Do the files' footer row counts sum to at most `limit`? Stops past
+    * `limit`, so a large table opens only its first footers; a listing
+    * or footer that cannot be read answers false. */
+  def rowsAtMost(conf: Configuration, files: => Iterator[FileStatus], limit: Long): Boolean =
+    try {
+      val it = files
+      var rows = 0L
+      while (rows <= limit && it.hasNext) rows += get(conf, it.next(), Set.empty).rows
+      rows <= limit
+    } catch { case scala.util.control.NonFatal(_) => false }
+
   /** Dedicated pool for footer/sidecar reads — the work is I/O-bound,
     * so it is sized well above the CPU count (ExecutionContext.global
     * would cap cold planning at #cores concurrent opens). */

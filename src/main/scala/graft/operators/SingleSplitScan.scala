@@ -4,9 +4,11 @@ import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -49,26 +51,31 @@ case class SingleSplitScan(spark: SparkSession) extends Rule[SparkPlan] {
   private def small(s: FileSourceScanExec): Boolean =
     s.relation.fileFormat.isInstanceOf[ParquetFileFormat] && !s.bucketedScan &&
       !spark.sessionState.conf.contains("spark.sql.files.minPartitionNum") &&
-      footerRowsAtMost(s, SingleSplitScan.MinRowsForConcurrentRead)
-
-  /** Sums footer row counts file by file, stopping past `limit`, so a
-    * large table opens only its first footers. A footer that cannot be
-    * read leaves the scan as it is; the scan reports its own error. */
-  private def footerRowsAtMost(s: FileSourceScanExec, limit: Long): Boolean =
-    try {
-      val conf = spark.sessionState.newHadoopConf()
-      val files = s.selectedPartitions.filePartitionIterator.flatMap(_.files)
-      var rows = 0L
-      while (rows <= limit && files.hasNext)
-        rows += FooterStats.get(conf, files.next().fileStatus, Set.empty).rows
-      rows <= limit
-    } catch { case scala.util.control.NonFatal(_) => false }
+      FooterStats.rowsAtMost(spark.sessionState.newHadoopConf(),
+        s.selectedPartitions.filePartitionIterator.flatMap(_.files).map(_.fileStatus),
+        SingleSplitScan.MinRowsForConcurrentRead)
 }
 
 object SingleSplitScan {
   /** The reference's `merge_tree_min_rows_for_concurrent_read`
     * (20 × the 8192-row index granule). */
   val MinRowsForConcurrentRead: Long = 20L * 8192
+
+  /** Does every leaf of `plan` and its subqueries hold at most this many
+    * rows by a known count (parquet footers, or its own size)? Any other
+    * leaf (a dialect table's parts, a cached relation) answers false. */
+  def fitsOneStream(spark: SparkSession, plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case l: LeafNode => l }.forall {
+      case l: LocalRelation => l.data.size <= MinRowsForConcurrentRead
+      case _: OneRowRelation => true
+      case r: Range => r.numElements <= MinRowsForConcurrentRead
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        FooterStats.rowsAtMost(spark.sessionState.newHadoopConf(),
+          fs.location.listFiles(Nil, Nil).iterator.flatMap(_.files).map(_.fileStatus),
+          MinRowsForConcurrentRead)
+      case _ => false
+    }
 }
 
 /** The scan's file partitions, in index order, as one partition. Stays

@@ -449,8 +449,18 @@ object ChDdl {
     org.apache.spark.sql.functions.col(
       if (n.contains(".")) s"`$n`" else n)
 
-  /** Execute one statement; SELECTs return a frame, DDL returns None. */
-  def execute(spark: SparkSession, stmtRaw: String): Option[DataFrame] = {
+  /** Execute one statement; SELECTs return a frame, DDL returns None.
+    * A frame whose inputs fit one read stream runs interpreted, compiling
+    * no code, as the reference interprets a query shape until it has run
+    * `min_count_to_compile` times. */
+  def execute(spark: SparkSession, stmtRaw: String): Option[DataFrame] =
+    run(spark, stmtRaw).map { df =>
+      if (!graft.operators.SingleSplitScan.fitsOneStream(spark, df.queryExecution.analyzed)) df
+      else org.apache.spark.sql.graftbridge.Bridge.interpreted(df)
+    }
+
+  /** [[execute]] with the frame kept in the caller's session (views). */
+  private def run(spark: SparkSession, stmtRaw: String): Option[DataFrame] = {
     val stmt = stmtRaw.trim.stripSuffix(";").trim
     val up = stmt.toUpperCase
     if (up.startsWith("SELECT") || up.startsWith("WITH"))
@@ -542,7 +552,7 @@ object ChDdl {
     else if (up.startsWith("ATTACH MATERIALIZED VIEW"))
       // an MV is a lazy view here — re-attaching just re-creates it
       // over the same stored query (corpus 00180)
-      execute(spark, stmt.replaceAll("(?i)^ATTACH\\s+", "CREATE "))
+      run(spark, stmt.replaceAll("(?i)^ATTACH\\s+", "CREATE "))
     else if (up.startsWith("ATTACH TABLE")) {
       val name0 = "(?i)^ATTACH\\s+TABLE\\s+([\\w.`]+)".r
         .findFirstMatchIn(stmt).map(_.group(1).replace("`", ""))
@@ -573,7 +583,7 @@ object ChDdl {
       tail match {
         case Some(at) =>
           insert(spark, stmt.substring(0, at).trim)
-          execute(spark, stmt.substring(at))
+          run(spark, stmt.substring(at))
         case None => insert(spark, stmt); None
       }
     }
@@ -791,8 +801,8 @@ object ChDdl {
         (df.filter(col("__gid") === 0).drop("__gid"),
           Some(df.filter(col("__gid") =!= 0).drop("__gid")))
       else (df, None)
-    val (mainA, totA) = split(execute(spark, subA).get)
-    val (mainB, totB) = split(execute(spark, subB).get)
+    val (mainA, totA) = split(run(spark, subA).get)
+    val (mainB, totB) = split(run(spark, subB).get)
     mainA.createOrReplaceTempView("__jt_a")
     mainB.createOrReplaceTempView("__jt_b")
     val mainOut = ChSql(spark,
@@ -1532,10 +1542,6 @@ object ChDdl {
         ChSql.mapOutsideQuotes(q)(seg => pat.replaceAllIn(seg, fview))
       }
     }
-
-  /** Run a whole multi-statement script, returning SELECT results. */
-  def executeScript(spark: SparkSession, script: String): Seq[DataFrame] =
-    ChSql.statements(script).flatMap(execute(spark, _))
 
   /** Lower-cased Pretty family names: the kind, then NoEscapes. */
   private val PrettyFormat =

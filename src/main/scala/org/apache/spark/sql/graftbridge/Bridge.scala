@@ -41,6 +41,40 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  private val twins = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.sql.classic.SparkSession, org.apache.spark.sql.classic.SparkSession]()
+
+  /** `df`'s query in a twin of its session that plans no whole-stage code
+    * and builds projections, predicates, orderings and deserializers
+    * interpreted. Spark reads both settings from the Dataset's session, so
+    * a twin sets them without touching the caller's. One twin per session,
+    * cloned on first use, takes the session's settings afresh on every
+    * call and reports its queries to the session's listeners. */
+  def interpreted(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val parent = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val twin = twins.computeIfAbsent(parent, { p =>
+      val t = p.cloneSession()
+      t.listenerManager.clear()
+      t.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          p.listenerManager.listListeners().foreach(_.onSuccess(f, qe, ns))
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+          p.listenerManager.listListeners().foreach(_.onFailure(f, qe, e))
+      })
+      t
+    })
+    val conf = twin.sessionState.conf
+    val want = parent.sessionState.conf.getAllConfs ++ Map(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    conf.synchronized {
+      conf.getAllConfs.keys.filterNot(want.contains).foreach(conf.unsetConf)
+      want.foreach { case (k, v) => if (conf.getConfString(k, null) != v) conf.setConfString(k, v) }
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      twin, df.queryExecution.analyzed, df.queryExecution.tracker)
+  }
+
   /** DataFrame over rows already in Spark's internal format, declaring
     * their partitioning and size — the classic LogicalRDD, whose
     * constructor takes the classic session (createDataFrame declares

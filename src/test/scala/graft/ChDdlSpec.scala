@@ -340,14 +340,7 @@ class ChDdlSpec extends SparkSpec {
     assert(rows(q) === Seq("200000|19999900000"))
     val again = ChDdl.execute(spark, q).get
     assert(again.collect().map(_.mkString("|")).toSeq === Seq("200000|19999900000"))
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def names(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => names(a.executedPlan)
-      case s: QueryStageExec => names(s.plan)
-      case _ => p.nodeName +: p.children.flatMap(names)
-    }
-    val plan = names(again.queryExecution.executedPlan)
+    val plan = nodeNames(again)
     assert(plan.intersect(Seq("Range", "Sort", "LocalTableScan")).isEmpty,
       again.queryExecution.executedPlan.toString)
     ChDdl.execute(spark, "DROP TABLE big")
@@ -582,5 +575,98 @@ class ChDdlSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq === Seq(7L))
     ChDdl.execute(spark, "DROP TABLE bb")
     ChDdl.execute(spark, "DROP TABLE bd")
+  }
+
+  /** Parquet view `name` of `rows` rows in 8 files; `rows` / `copies`
+    * ids, each `copies` times, one copy with `dup` false. Every file
+    * holds both `dup` values, so a filter on it prunes no file. */
+  private def idsView(name: String, rows: Long, copies: Int): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("interp").toString + "/t"
+    spark.range(0, rows, 1, 8).selectExpr(s"id DIV $copies AS id",
+      s"(id DIV $copies) % 89 AS k", s"id % $copies > 0 AS dup").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView(name)
+  }
+
+  /** Physical node names of `df`'s executed plan, through AQE stages. */
+  private def nodeNames(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def names(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => names(a.executedPlan)
+      case s: QueryStageExec => names(s.plan)
+      case _ => p.nodeName +: p.children.flatMap(names)
+    }
+    names(df.queryExecution.executedPlan)
+  }
+
+  private def wholeStage(df: org.apache.spark.sql.DataFrame): Boolean =
+    nodeNames(df).exists(_.startsWith("WholeStageCodegen"))
+
+  test("a SELECT over at most 20 x 8192 parquet rows runs interpreted, a larger one compiled") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    idsView("ids_small", 100000, 1)
+    idsView("ids_big", 200000, 2)
+    /** `text` over `t`: its frame, its rows and the classes compiled. */
+    def run(text: String, t: String) = {
+      val c0 = METRIC_COMPILATION_TIME.getCount
+      val df = ChDdl.execute(spark, text.replace("TBL", t)).get
+      val got = df.collect().map(_.mkString("|")).toSeq
+      (df, got, METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    // filter, projection, sort and collect: nothing is compiled
+    val sorted = "SELECT id, k, id * 9931 + k AS v FROM TBL WHERE id % 9929 < 3 AND NOT dup " +
+      "ORDER BY v DESC"
+    val (small, smallRows, smallCompiles) = run(sorted, "ids_small")
+    assert(!wholeStage(small), small.queryExecution.executedPlan)
+    assert(smallCompiles === 0)
+    val (big, bigRows, bigCompiles) = run(sorted, "ids_big")
+    assert(wholeStage(big), big.queryExecution.executedPlan)
+    assert(bigCompiles > 0)
+    assert(smallRows.size === 33)
+    assert(smallRows === bigRows)
+    // an aggregate and top-k plan no whole-stage code either; Spark
+    // still compiles the partial aggregate's row joiner and the top-k
+    // ordering, which have no interpreted form
+    val top = "SELECT k, count() AS c, sum(id * 9931) AS s FROM TBL WHERE NOT dup " +
+      "GROUP BY k ORDER BY c DESC, s DESC LIMIT 10"
+    val (smallTop, smallTopRows, _) = run(top, "ids_small")
+    assert(!wholeStage(smallTop), smallTop.queryExecution.executedPlan)
+    val (bigTop, bigTopRows, _) = run(top, "ids_big")
+    assert(wholeStage(bigTop), bigTop.queryExecution.executedPlan)
+    assert(smallTopRows.size === 10)
+    assert(smallTopRows === bigTopRows)
+  }
+
+  test("a small dialect query leaves the caller's session, settings and listeners as they were") {
+    import org.apache.spark.sql.execution.QueryExecution
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val before = keys.map(spark.conf.getOption)
+    val dir = java.nio.file.Files.createTempDirectory("interp").toString + "/ts"
+    spark.sql("SELECT TIMESTAMP'2020-01-01 00:00:00 UTC' AS ts").write.parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("ts_src")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val tz = "spark.sql.session.timeZone"
+    assert(rows("SELECT count() FROM ts_src") === Seq("1"))
+    spark.listenerManager.register(l)
+    spark.conf.set(tz, "America/New_York")
+    try {
+      val df = ChDdl.execute(spark, "SELECT toHour(ts) AS h FROM ts_src").get
+      assert(df.collect().map(_.getInt(0)).toSeq === Seq(19))
+      assert(df.sparkSession.conf.get(tz) === "America/New_York")
+      assert(!wholeStage(df), df.queryExecution.executedPlan)
+      org.apache.spark.sql.graftbridge.TestBridge.drainListeners(spark.sparkContext)
+      assert(seen.contains(df.queryExecution))
+    } finally {
+      spark.listenerManager.unregister(l)
+      spark.conf.set(tz, "UTC")
+    }
+    assert(keys.map(spark.conf.getOption) === before)
+    val plain = spark.sql("SELECT id % 7 AS k, count(*) FROM range(1000) GROUP BY id % 7")
+    assert(plain.collect().length === 7)
+    assert(wholeStage(plain), plain.queryExecution.executedPlan)
   }
 }
