@@ -9,8 +9,10 @@
 # threshold, jdk.ClassDefine), then prints
 #   - the JIT compiler's time by package of the compiled method, with
 #     Spark's generated classes (Janino) apart;
+#   - the Janino compile count: each compile defines one GeneratedClass;
 #   - the classes Spark generated, by kind (SpecificUnsafeProjection,
-#     GeneratedIteratorForCodegenStage, ...).
+#     GeneratedIteratorForCodegenStage, ...), the GeneratedClass of each
+#     compile and the classes nested in it counted together.
 # The harness ends with Runtime.halt, which skips JFR's dump at exit, so
 # the recording is read from its disk repository, written in 1 MB chunks;
 # every chunk that parses is read (the last one, cut by the halt, may
@@ -80,6 +82,7 @@ print(f"JIT: {sum(compile_n.values())} compilations, {total:.1f} s ({tier2:.1f} 
 print("JIT compile time by package of the compiled method:")
 for k, s in compile_s.most_common(15):
     print(f"  {s:8.2f} s  {compile_n[k]:6d}  {k}")
+print(f"Janino compiles: {kinds['GeneratedClass']}")
 print(f"generated classes: {sum(kinds.values())}")
 for k, n in kinds.most_common():
     print(f"  {n:6d}  {k}")

@@ -46,6 +46,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the aggregate, sort or window above it plans no exchange (the
     // reference's merge_tree_min_rows_for_concurrent_read)
     ext.injectQueryPostPlannerStrategyRule(s => graft.operators.SingleSplitScan(s))
+    // over one partition, a Partial→Final aggregate pair runs as one
+    // complete pass (the reference's one-stream Aggregator), and an
+    // interpreted plan's ORDER BY … LIMIT orders without compiling
+    ext.injectQueryPostPlannerStrategyRule(s => graft.operators.SingleStream(s))
   }
 }
 

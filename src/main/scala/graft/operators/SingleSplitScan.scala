@@ -27,8 +27,8 @@ object InIndexOrder extends PartitionCoalescer with Serializable {
 /** A small parquet scan reads as one split. The reference gives each
   * read stream at least `merge_tree_min_rows_for_concurrent_read` rows
   * (20 × 8192), so a SELECT below that is one stream and its aggregate
-  * one complete pass with no merge step (SURVEY §3.1 `max_streams`,
-  * §2.4 partial → final). Spark would spread the scan over the
+  * one complete pass with no merge step ([[SingleStream]]; SURVEY §3.1
+  * `max_streams`, §2.4 partial → final). Spark would spread the scan over the
   * session's cores, and every GROUP BY, ORDER BY or window above it
   * would plan a shuffle and a second stage.
   *

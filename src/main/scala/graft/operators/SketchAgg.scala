@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -225,7 +226,9 @@ object SketchAgg {
   }
 }
 
-/** Plans the eligible Aggregate shape as Partial→(exchange)→Final. */
+/** Plans the eligible Aggregate shape as Partial→(exchange)→Final.
+  * Over a one-partition input, [[SingleStream]] makes the pair one
+  * [[CompleteSketchAggExec]] pass. */
 object SketchAggStrategy extends SparkStrategy {
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(grouping, aggExprs, results, child)
@@ -246,6 +249,11 @@ private[operators] sealed trait AggState {
   def mergeRow(idx: Int, row: InternalRow): Unit
   /** Value for the partial-output row. */
   def partialValue(idx: Int): Any
+  /** Writes the partial-output column(s) at `ord` of `out`; returns the
+    * ordinal after them. */
+  def writePartial(idx: Int, out: InternalRow, ord: Int): Int = {
+    out.update(ord, partialValue(idx)); ord + 1
+  }
   /** Value for the final result row. */
   def resultValue(idx: Int): Any
   def reset(n: Int): Unit
@@ -407,9 +415,10 @@ private[operators] object AggState {
       s(idx) += row.getDouble(bufOrd)
       c(idx) += row.getLong(bufOrd + 1)
     }
-    def partialSum(idx: Int): Double = s(idx)
-    def partialCnt(idx: Int): Long = c(idx)
     def partialValue(idx: Int): Any = s(idx)
+    override def writePartial(idx: Int, out: InternalRow, ord: Int): Int = {
+      out.update(ord, s(idx)); out.setLong(ord + 1, c(idx)); ord + 2
+    }
     def resultValue(idx: Int): Any =
       if (c(idx) == 0L) null else s(idx) / c(idx)
     def reset(n: Int): Unit = { s = new Array[Double](64); c = new Array[Long](64) }
@@ -433,9 +442,10 @@ private[operators] object AggState {
       s(idx) += row.getDouble(bufOrd)
       c(idx) += row.getLong(bufOrd + 1)
     }
-    def partialSum(idx: Int): Double = s(idx)
-    def partialCnt(idx: Int): Long = c(idx)
-    def partialValue(idx: Int): Any = s(idx) // unused (two columns)
+    def partialValue(idx: Int): Any = s(idx)
+    override def writePartial(idx: Int, out: InternalRow, ord: Int): Int = {
+      out.update(ord, s(idx)); out.setLong(ord + 1, c(idx)); ord + 2
+    }
     def resultValue(idx: Int): Any =
       if (c(idx) == 0L) null else s(idx) / c(idx)
     def reset(n: Int): Unit = { s = new Array[Double](64); c = new Array[Long](64) }
@@ -674,7 +684,8 @@ private[operators] final class GroupKeyMap(
   }
 }
 
-/** Shared machinery for the two stages. */
+/** Shared machinery of the SketchAgg operators: the update pass (input
+  * rows → typed map) and the merge (partial rows → typed map → results). */
 private[operators] trait SketchAggExecBase extends UnaryExecNode {
   def keys: Seq[NamedExpression]
   def aggs: Seq[AggregateExpression]
@@ -813,6 +824,518 @@ private[operators] trait SketchAggExecBase extends UnaryExecNode {
       i += 1
     }
   }
+
+  /** The partial row: the group keys, then [[bufferFields]]. */
+  private[operators] lazy val payloadOutput: Seq[Attribute] =
+    keys.map(_.toAttribute) ++ bufferFields.map(f =>
+      AttributeReference(f.name, f.dataType, f.nullable)())
+
+  protected def payloadSchema: StructType =
+    StructType(payloadOutput.map(a => StructField(a.name, a.dataType, a.nullable)))
+
+  /** Where the update pass reads its keys and aggregate inputs, built on
+    * the driver. Computed keys / agg children evaluate through ONE
+    * projection (interpreted Expression.eval per row is 5-10x slower);
+    * the typed map then reads plain ordinals. All-attribute shapes skip
+    * the projection entirely. */
+  protected def updateInput: UpdateInput = {
+    val childOut = child.output
+    val nk = keys.length
+    val innerKeys: Seq[Expression] = keys.map {
+      case al: Alias => al.child
+      case k => k
+    }
+    val aggKids: Seq[Option[Expression]] = aggs.map(_.aggregateFunction match {
+      case u: UniqSketch => Some(u.child)
+      case a: graft.functions.ChAny => Some(a.child)
+      // literal child: nothing to project — CountStar counts rows via
+      // CountState(-1); a NULL literal counts 0 via CountExprState
+      // evaluating the literal itself (never send NullType through the
+      // UnsafeProjection)
+      case Count(Seq(_: Literal)) => None
+      case Count(Seq(c)) => Some(c)
+      case Sum(c, _) => Some(c)
+      case Average(c, _) => Some(c)
+      case other => throw new IllegalStateException(other.toString)
+    })
+    if ((innerKeys ++ aggKids.flatten).forall(_.isInstanceOf[AttributeReference]))
+      UpdateInput(childOut, None, keys, aggs, childOut)
+    else {
+      // projected layout: keys at 0..nk-1, present agg children after
+      val projExprs: Seq[Expression] = innerKeys ++ aggKids.flatten
+      val projAttrs: Seq[AttributeReference] = projExprs.zipWithIndex.map {
+        case (e, i) => AttributeReference(s"_p$i", e.dataType, e.nullable)()
+      }
+      val kidAttr: Seq[Option[AttributeReference]] = {
+        var next = nk
+        aggKids.map {
+          case Some(_) => val a = projAttrs(next); next += 1; Some(a)
+          case None => None
+        }
+      }
+      val rewritten = aggs.zip(kidAttr).map { case (e, ka) =>
+        val f = e.aggregateFunction match {
+          case u: UniqSketch => u.copy(child = ka.get)
+          case a: graft.functions.ChAny => a.copy(child = ka.get)
+          case c @ Count(Seq(_: Literal)) => c
+          case Count(Seq(_)) => Count(Seq(ka.get))
+          case sum: Sum => sum.copy(child = ka.get)
+          case avg: Average => avg.copy(child = ka.get)
+          case other => throw new IllegalStateException(other.toString)
+        }
+        e.copy(aggregateFunction = f)
+      }
+      UpdateInput(childOut, Some(projExprs), projAttrs.take(nk), rewritten, projAttrs)
+    }
+  }
+
+  /** One task's update pass over its input rows. */
+  protected def openUpdate(in: UpdateInput, rows0: Iterator[InternalRow],
+      flushAt: Int): UpdatePass = {
+    val rows = in.projection match {
+      case Some(es) => rows0.map(UnsafeProjection.create(es, in.from))
+      case None => rows0
+    }
+    val readers = in.keys.map(k => keyReaderFor(k, in.input)).toArray
+    // ordinal of an attribute child in the effective input, -1 if
+    // the child is a computed expression (cannot happen post-proj)
+    def attrOrd(e: Expression): Int = e match {
+      case a: AttributeReference => in.input.indexWhere(_.exprId == a.exprId)
+      case _ => -1
+    }
+    // bind agg children to the effective input and build states
+    var bufOrd = keys.length
+    val states: Array[AggState] = in.aggs.map { e =>
+      e.aggregateFunction match {
+        case u: UniqSketch =>
+          val bound = BindReferences.bindReference(u.child, in.input)
+          val st = new AggState.UniqState(u.copy(child = bound), bufOrd)
+          bufOrd += 1; st
+        case a: graft.functions.ChAny =>
+          val bound = a.copy(
+            child = BindReferences.bindReference(a.child, in.input))
+          val st = new AggState.AnyState(bound, bufOrd); bufOrd += 1; st
+        case SketchAgg.CountStar() =>
+          val st = new AggState.CountState(-1, bufOrd); bufOrd += 1; st
+        case Count(Seq(c)) =>
+          val o = attrOrd(c)
+          val st: AggState =
+            if (o >= 0) new AggState.CountState(o, bufOrd)
+            else new AggState.CountExprState(
+              BindReferences.bindReference(c, in.input), bufOrd)
+          bufOrd += 1; st
+        case Sum(c, ctx) =>
+          val o = attrOrd(c)
+          val ansi = ctx.evalMode == EvalMode.ANSI
+          val st: AggState = if (o >= 0) {
+            val get: InternalRow => Long = c.dataType match {
+              case IntegerType => r => r.getInt(o).toLong
+              case ShortType => r => r.getShort(o).toLong
+              case ByteType => r => r.getByte(o).toLong
+              case t => throw new IllegalStateException(t.toString)
+            }
+            new AggState.SumState(o, get, bufOrd, ansi)
+          } else new AggState.SumExprState(
+            BindReferences.bindReference(c, in.input), bufOrd, ansi)
+          bufOrd += 1; st
+        case Average(c, _) =>
+          val o = attrOrd(c)
+          val st: AggState = if (o >= 0) {
+            val get: InternalRow => Double = c.dataType match {
+              case IntegerType => r => r.getInt(o).toDouble
+              case ShortType => r => r.getShort(o).toDouble
+              case ByteType => r => r.getByte(o).toDouble
+              case t => throw new IllegalStateException(t.toString)
+            }
+            new AggState.AvgState(o, get, bufOrd)
+          } else new AggState.AvgExprState(
+            BindReferences.bindReference(c, in.input), bufOrd)
+          bufOrd += 2; st
+        case other => throw new IllegalStateException(other.toString)
+      }
+    }.toArray
+    new UpdatePass(rows, readers, states, new GroupKeyMap(keyIsString, keyNullable), flushAt)
+  }
+
+  /** The pass's window as partial rows ([[payloadOutput]]), streamed
+    * lazily through one reused output row with no per-group copy: every
+    * consumer (shuffle writer, packer, merge) takes a row's bytes before
+    * pulling the next, so materializing the window into an Array would
+    * only double peak memory right at the boundary the flush threshold
+    * exists to bound. The map and states stay live until the window is
+    * drained. */
+  protected def payloadRows(pass: UpdatePass,
+      toUnsafe: UnsafeProjection): Iterator[InternalRow] = {
+    val nGroups = pass.groups
+    val isStr = keyIsString
+    val nk = keys.length
+    val out = new GenericInternalRow(payloadOutput.length)
+    new Iterator[InternalRow] {
+      private var g = 0
+      override def hasNext: Boolean = g < nGroups
+      override def next(): InternalRow = {
+        writeKey(pass.gmap, g, out, isStr)
+        var ord = nk
+        var ai = 0
+        while (ai < pass.states.length) {
+          ord = pass.states(ai).writePartial(g, out, ord); ai += 1
+        }
+        g += 1
+        toUnsafe(out)
+      }
+    }
+  }
+
+  /** The pass's flush windows as partial rows, one [[payloadRows]] per
+    * window; with `bypass`, the adaptive bypass of
+    * [[SketchAgg.BypassSampleRows]] streams futile windows' rows as
+    * one-row partials instead. */
+  protected def windows(pass: UpdatePass, toUnsafe: UnsafeProjection,
+      bypass: Option[Bypass]): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private var pending: Iterator[InternalRow] = Iterator.empty
+    private var done = false
+    private var needReset = false
+    private var sampled = 0L // rows aggregated before the decision
+    private var decided = bypass.isEmpty
+    private var countedBypass = false // bypassTasks counts tasks once
+    private def consume(): Unit = {
+      if (needReset) { // previous window fully drained: recycle
+        pass.reset()
+        needReset = false
+      }
+      // aggregate until flush threshold, sample boundary (pre-
+      // decision only), or input end
+      var aggregate = true
+      while (aggregate) {
+        aggregate = false
+        sampled += pass.fill(if (decided) Long.MaxValue else bypass.get.sampleRows - sampled)
+        if (!decided) {
+          decided = true
+          val b = bypass.get
+          if (pass.rows.hasNext && sampled > 0 &&
+              pass.gmap.n >= SketchAgg.BypassRatio * sampled) {
+            // futile map (≈ every row opened a new group): drain
+            // the sampled window, then stream the next
+            // [[SketchAgg.BypassRecheckRows]] rows as one-row
+            // partials through the singleton projection — no
+            // readers, no hashing, no map. NOT unbounded: a
+            // clustered-prefix partition (high-NDV head, repetitive
+            // tail) re-samples after the window so the map comes
+            // back exactly when it stops being futile.
+            if (!countedBypass) { b.tasks.add(1); countedBypass = true }
+            pending = payloadRows(pass, toUnsafe) ++ new Iterator[InternalRow] {
+              private var streamed = 0L
+              override def hasNext: Boolean =
+                streamed < b.recheckRows && pass.rows.hasNext
+              override def next(): InternalRow = {
+                b.rows.add(1)
+                streamed += 1
+                b.proj(pass.rows.next())
+              }
+            }
+            // after the streamed window drains, hasNext() re-enters
+            // consume(), which recycles the map and re-samples; an
+            // exhausted input just emits the (empty) next window
+            needReset = true
+            decided = false
+            sampled = 0L
+            return
+          }
+          // no bypass: resume aggregating the SAME window — a
+          // non-triggering task must not pay an extra emit/reset
+          // boundary at the sample mark
+          aggregate = pass.rows.hasNext && !pass.full
+        }
+      }
+      pending = payloadRows(pass, toUnsafe)
+      if (pass.rows.hasNext) needReset = true else done = true
+    }
+    override def hasNext: Boolean = {
+      while (!pending.hasNext && !done) consume()
+      pending.hasNext
+    }
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      pending.next()
+    }
+  }
+
+  /** Projects keys ++ aggregate results to `resultExprs`. */
+  protected def resultProjection(resultExprs: Seq[NamedExpression]): UnsafeProjection =
+    UnsafeProjection.create(resultExprs,
+      keys.map(_.toAttribute) ++ aggs.map(_.resultAttribute))
+
+  /** Groups `0 until n` of `gmap` as result rows: the keys and each
+    * state's result, through `proj` ([[resultProjection]]). */
+  protected def resultRows(gmap: GroupKeyMap, states: Array[AggState], n: Int,
+      proj: UnsafeProjection): Iterator[InternalRow] = {
+    val nk = keys.length
+    val isStr = keyIsString
+    val mid = new GenericInternalRow(nk + states.length)
+    new Iterator[InternalRow] {
+      private var g = 0
+      override def hasNext: Boolean = g < n
+      override def next(): InternalRow = {
+        writeKey(gmap, g, mid, isStr)
+        var ai = 0
+        while (ai < states.length) {
+          states(ai).ensure(g + 1)
+          mid.update(nk + ai, states(ai).resultValue(g))
+          ai += 1
+        }
+        g += 1
+        proj(mid)
+      }
+    }
+  }
+
+  /** Merges partial rows, laid out as `payload` (keys, then
+    * [[bufferFields]]), and emits the result rows. Each row is fully
+    * merged before the next is pulled, so rows may point into reused
+    * memory. Hash-merges until the input ends OR `maxGroups` in-memory
+    * groups: the merge cannot emit-and-reset like the update pass — a
+    * group may still receive merges — so past the cap it falls back to
+    * sort-based merging, mirroring ObjectHashAggregateExec. `timed`
+    * gets the merge loop's nanoseconds and the sampled share of them
+    * spent pulling rows. */
+  protected def merge(rows: Iterator[InternalRow], payload: Seq[Attribute],
+      resultExprs: Seq[NamedExpression], maxGroups: Int,
+      timed: (Long, Long) => Unit): Iterator[InternalRow] = {
+    val keyTypes = keys.map(_.dataType).toArray
+    val isStr = keyIsString
+    val nk = keys.length
+    // key parts sit at ordinals 0..nk-1 of the partial row
+    val readers = keyTypes.zipWithIndex.map { case (t, i) => keyReader(t, i) }
+    var bufOrd = nk
+    val states: Array[AggState] = aggs.map { e =>
+      e.aggregateFunction match {
+        case u: UniqSketch =>
+          val st = new AggState.UniqState(u, bufOrd); bufOrd += 1; st
+        case a: graft.functions.ChAny =>
+          val st = new AggState.AnyState(a, bufOrd); bufOrd += 1; st
+        case _: Count =>
+          val st = new AggState.CountState(-1, bufOrd); bufOrd += 1; st
+        case Sum(_, ctx) =>
+          val st = new AggState.SumState(-1, null, bufOrd,
+            ctx.evalMode == EvalMode.ANSI); bufOrd += 1; st
+        case _: Average =>
+          val st = new AggState.AvgState(-1, null, bufOrd); bufOrd += 2; st
+        case other => throw new IllegalStateException(other.toString)
+      }
+    }.toArray
+    val gmap = new GroupKeyMap(isStr, keyNullable)
+    // Timing: the loop is metered whole; every 128th (hasNext, next)
+    // pair is timed and extrapolated to split the pull (exchange
+    // fetch+deser) from merge compute. next() and hasNext() are timed
+    // SEPARATELY around the merge — the merge must complete before
+    // hasNext advances the input, whose reused buffer may back the
+    // rows (see FinalSketchAggExec's unpacking)
+    val loopT0 = System.nanoTime()
+    var fetchNs = 0L
+    var rowCnt = 0L
+    var more = rows.hasNext
+    // state capacity ensured only when a new group appears (see the
+    // update pass's note) — not per row per state
+    var ensured = 0
+    while (more && gmap.n < maxGroups) {
+      val sampled = (rowCnt & 127) == 0
+      var t0 = if (sampled) System.nanoTime() else 0L
+      val row = rows.next()
+      if (sampled) fetchNs += (System.nanoTime() - t0) << 7
+      rowCnt += 1
+      var i = 0
+      while (i < nk) { readers(i)(row, gmap, i); i += 1 }
+      val g = if (nk > 0 || gmap.n == 0) gmap.findOrInsert(gmap.rowHash()) else 0
+      if (gmap.n != ensured) {
+        ensured = gmap.n
+        var ae = 0
+        while (ae < states.length) { states(ae).ensure(ensured); ae += 1 }
+      }
+      var ai = 0
+      while (ai < states.length) {
+        states(ai).mergeRow(g, row); ai += 1
+      }
+      t0 = if (sampled) System.nanoTime() else 0L
+      more = rows.hasNext
+      if (sampled) fetchNs += (System.nanoTime() - t0) << 7
+    }
+    timed(System.nanoTime() - loopT0, fetchNs)
+    val proj = resultProjection(resultExprs)
+
+    if (!rows.hasNext) {
+      // in-memory path (the overwhelmingly common case); a global agg
+      // over an empty input emits the default state row (count 0, uniq
+      // 0, sum/avg NULL) exactly once — only the single AllTuples
+      // partition exists, so this is the one row
+      resultRows(gmap, states, if (nk == 0) 1 else gmap.n, proj)
+    } else {
+      // Sort-based fallback: spill everything seen so far plus the
+      // rest of the input into an UnsafeKVExternalSorter (the same
+      // machinery HashAggregateExec/ObjectHashAggregateExec fall
+      // back to), then merge adjacent equal-key runs. Bounded
+      // memory: the sorter spills to disk under memory pressure;
+      // only one group's state is live at a time.
+      val keySchema = StructType(payload.take(nk).map(a =>
+        StructField(a.name, a.dataType, a.nullable)))
+      val valSchema = StructType(payload.drop(nk).map(a =>
+        StructField(a.name, a.dataType, a.nullable)))
+      val env = org.apache.spark.SparkEnv.get
+      val sorter = new org.apache.spark.sql.execution.UnsafeKVExternalSorter(
+        keySchema, valSchema, env.blockManager, env.serializerManager,
+        org.apache.spark.sql.graftbridge.Bridge.taskPageSizeBytes(),
+        Integer.MAX_VALUE, java.lang.Long.MAX_VALUE)
+      // 1. re-serialize the accumulated map as synthetic partial rows
+      val keyRow = new GenericInternalRow(math.max(nk, 1))
+      val keyToUnsafe = UnsafeProjection.create(keySchema)
+      val bufRow = new GenericInternalRow(payload.length - nk)
+      val bufToUnsafe = UnsafeProjection.create(valSchema)
+      var g = 0
+      while (g < gmap.n) {
+        writeKey(gmap, g, keyRow, isStr)
+        var ord = 0
+        var ai = 0
+        while (ai < states.length) {
+          ord = states(ai).writePartial(g, bufRow, ord); ai += 1
+        }
+        sorter.insertKV(keyToUnsafe(keyRow), bufToUnsafe(bufRow))
+        g += 1
+      }
+      gmap.reset()
+      locally { var ai = 0; while (ai < states.length) { states(ai).reset(0); ai += 1 } }
+      // 2. feed the remaining partial rows, split key/buffer
+      val splitKey = UnsafeProjection.create(payload.take(nk), payload)
+      val splitVal = UnsafeProjection.create(payload.drop(nk), payload)
+      while (rows.hasNext) {
+        val r = rows.next()
+        sorter.insertKV(splitKey(r), splitVal(r))
+      }
+      // 3. merge adjacent equal-key runs (equal keys have equal
+      // UnsafeRow bytes — both insert paths project the same schema
+      // — and the sorter orders by key bytes, so runs are contiguous)
+      val iter = sorter.sortedIterator()
+      Option(org.apache.spark.TaskContext.get()).foreach(
+        _.addTaskCompletionListener[Unit](_ => sorter.cleanupResources()))
+      val joined = new JoinedRow
+      val mid = new GenericInternalRow(nk + states.length)
+      new Iterator[InternalRow] {
+        private var has = iter.next()
+        override def hasNext: Boolean = has
+        override def next(): InternalRow = {
+          if (!has) throw new NoSuchElementException
+          val curKey = iter.getKey.copy()
+          var ai = 0
+          while (ai < states.length) {
+            states(ai).ensure(1); states(ai).clear(0); ai += 1
+          }
+          var more = true
+          while (more) {
+            joined(iter.getKey, iter.getValue)
+            var aj = 0
+            while (aj < states.length) { states(aj).mergeRow(0, joined); aj += 1 }
+            has = iter.next()
+            more = has && iter.getKey == curKey
+          }
+          var i = 0
+          while (i < nk) {
+            if (curKey.isNullAt(i)) mid.update(i, null)
+            else keyTypes(i) match {
+              case StringType => mid.update(i, curKey.getUTF8String(i))
+              case LongType => mid.setLong(i, curKey.getLong(i))
+              case IntegerType | DateType => mid.setInt(i, curKey.getInt(i))
+              case ShortType => mid.setShort(i, curKey.getShort(i))
+              case ByteType => mid.setByte(i, curKey.getByte(i))
+              case t => throw new IllegalStateException(t.toString)
+            }
+            i += 1
+          }
+          var ak = 0
+          while (ak < states.length) {
+            mid.update(nk + ak, states(ak).resultValue(0)); ak += 1
+          }
+          proj(mid)
+        }
+      }
+    }
+  }
+}
+
+/** Where an update pass reads its keys and aggregate inputs: the rows of
+  * `from`, through `projection` when there is one, laid out as `input`. */
+private[operators] final case class UpdateInput(
+    from: Seq[Attribute],
+    projection: Option[Seq[Expression]],
+    keys: Seq[NamedExpression],
+    aggs: Seq[AggregateExpression],
+    input: Seq[Attribute])
+
+/** One partial task's adaptive bypass (see [[SketchAgg.BypassSampleRows]]):
+  * the singleton-partial projection, the sample and re-check sizes, and
+  * the task and row counters. */
+private[operators] final case class Bypass(
+    proj: UnsafeProjection,
+    sampleRows: Long,
+    recheckRows: Long,
+    tasks: SQLMetric,
+    rows: SQLMetric)
+
+/** One task's update pass: input rows fold into a typed map and its
+  * column-striped states, one flush window of at most `flushAt` groups
+  * at a time (Spark's partial-agg spill analog), so skewed or high-NDV
+  * keys cannot OOM a task. */
+private[operators] final class UpdatePass(
+    val rows: Iterator[InternalRow],
+    readers: Array[(InternalRow, GroupKeyMap, Int) => Unit],
+    val states: Array[AggState],
+    val gmap: GroupKeyMap,
+    flushAt: Int) {
+  private val nk = readers.length
+
+  /** Folds at most `limit` rows into the window, stopping early when it
+    * is full or the input ends; returns the rows folded. */
+  def fill(limit: Long): Long = {
+    // state capacity is ensured ONLY when a new group appears
+    // (gmap.n moved) — the per-row per-state ensure() calls
+    // were ~a virtual call + bounds check × states × rows in
+    // the jstack profile of the map path
+    var ensured = 0
+    var n = 0L
+    while (n < limit && rows.hasNext && gmap.n < flushAt) {
+      val row = rows.next()
+      var i = 0
+      while (i < nk) { readers(i)(row, gmap, i); i += 1 }
+      val g = if (nk > 0 || gmap.n == 0) gmap.findOrInsert(gmap.rowHash()) else 0
+      if (gmap.n != ensured) {
+        ensured = gmap.n
+        var ae = 0
+        while (ae < states.length) { states(ae).ensure(ensured); ae += 1 }
+      }
+      var ai = 0
+      while (ai < states.length) {
+        states(ai).update(g, row); ai += 1
+      }
+      n += 1
+    }
+    n
+  }
+
+  def full: Boolean = gmap.n >= flushAt
+
+  /** Groups in the window, with every state sized for them. A keyless
+    * pass always has its one group: a global agg over an empty input
+    * still has a zero state. */
+  def groups: Int = {
+    val n = if (nk == 0) math.max(gmap.n, 1) else gmap.n
+    var ai = 0
+    while (ai < states.length) { states(ai).ensure(math.max(n, 1)); ai += 1 }
+    n
+  }
+
+  /** Starts the next window; the previous one is drained. */
+  def reset(): Unit = {
+    gmap.reset()
+    var ai = 0
+    while (ai < states.length) { states(ai).reset(0); ai += 1 }
+  }
 }
 
 /** Partial stage: input rows → one row per (flush-window, group) with
@@ -841,10 +1364,6 @@ case class PartialSketchAggExec(
   // and refabricate fresh exprIds
   @transient @volatile private var outputMemo: Seq[Attribute] = _
 
-  private[operators] lazy val payloadOutput: Seq[Attribute] =
-    keys.map(_.toAttribute) ++ bufferFields.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-
   // synchronized: two threads racing the first call (AQE stage
   // planning and the SQL UI both walk plans) must not each fabricate a
   // distinct attribute set — a non-memoized set escaping to one caller
@@ -864,7 +1383,6 @@ case class PartialSketchAggExec(
       .createMetric(sparkContext, "tasks that switched to adaptive bypass"),
     "bypassRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
       .createMetric(sparkContext, "rows streamed as one-row partials"))
-
   /** Singleton-partial projection for the adaptive bypass: key
     * expressions followed by each aggregate's ONE-ROW wire state, all
     * over the effective (possibly pre-projected) input row — exactly
@@ -929,303 +1447,32 @@ case class PartialSketchAggExec(
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val isStr = keyIsString
-    val nullable = keyNullable
-    val childOut = child.output
-    val aggsLocal = aggs
-    val keysLocal = keys
-    val nk = keys.length
-    val outWidth = payloadOutput.length
-    val outSchema = StructType(payloadOutput.map(a =>
-      StructField(a.name, a.dataType, a.nullable)))
+    val in = updateInput
     val flushAt = SketchAgg.PartialFlushGroups
+    val schema = payloadSchema
     // packed-exchange plumbing (see SketchAgg.PackBuckets): bucket =
-    // murmur3(key parts) mod PackBuckets, computed by a codegen'd
-    // projection over the payload row (same hash for map-emitted and
-    // bypass-streamed rows — equal keys always share a bucket)
+    // murmur3(key parts) mod PackBuckets, computed by a projection over
+    // the payload row (same hash for map-emitted and bypass-streamed
+    // rows — equal keys always share a bucket)
     val packedLocal = packed
     val (packRecBytes, packBitmapKept) = packRecordSpec
-    val bucketExpr: Expression =
-      Pmod(new Murmur3Hash(payloadOutput.take(nk)), Literal(SketchAgg.PackBuckets))
     val payloadAttrs = payloadOutput
-
-    // Computed keys / agg children evaluate through ONE codegen'd
-    // projection (interpreted Expression.eval per row is 5-10x
-    // slower); the typed map then reads plain ordinals. All-attribute
-    // shapes skip the projection entirely.
-    val innerKeys: Seq[Expression] = keysLocal.map {
-      case al: Alias => al.child
-      case k => k
-    }
-    val aggKids: Seq[Option[Expression]] = aggsLocal.map(_.aggregateFunction match {
-      case u: UniqSketch => Some(u.child)
-      case a: graft.functions.ChAny => Some(a.child)
-      // literal child: nothing to project — CountStar counts rows via
-      // CountState(-1); a NULL literal counts 0 via CountExprState
-      // evaluating the literal itself (never send NullType through the
-      // UnsafeProjection)
-      case Count(Seq(_: Literal)) => None
-      case Count(Seq(c)) => Some(c)
-      case Sum(c, _) => Some(c)
-      case Average(c, _) => Some(c)
-      case other => throw new IllegalStateException(other.toString)
-    })
-    val allAttrs =
-      (innerKeys ++ aggKids.flatten).forall(_.isInstanceOf[AttributeReference])
-    // projected layout: keys at 0..nk-1, present agg children after
-    val projExprs: Seq[Expression] = innerKeys ++ aggKids.flatten
-    val projAttrs: Seq[AttributeReference] = projExprs.zipWithIndex.map {
-      case (e, i) => AttributeReference(s"_p$i", e.dataType, e.nullable)()
-    }
-    val kidAttr: Seq[Option[AttributeReference]] = {
-      var next = nk
-      aggKids.map {
-        case Some(_) => val a = projAttrs(next); next += 1; Some(a)
-        case None => None
-      }
-    }
-    // shape the state builder sees: either the raw child or the
-    // projected row
-    val (effKeys: Seq[NamedExpression], effAggs: Seq[AggregateExpression],
-        effOut: Seq[Attribute]) =
-      if (allAttrs) (keysLocal, aggsLocal, childOut)
-      else {
-        val rewritten = aggsLocal.zip(kidAttr).map { case (e, ka) =>
-          val f = e.aggregateFunction match {
-            case u: UniqSketch => u.copy(child = ka.get)
-            case a: graft.functions.ChAny => a.copy(child = ka.get)
-            case c @ Count(Seq(_: Literal)) => c
-            case Count(Seq(_)) => Count(Seq(ka.get))
-            case sum: Sum => sum.copy(child = ka.get)
-            case avg: Average => avg.copy(child = ka.get)
-            case other => throw new IllegalStateException(other.toString)
-          }
-          e.copy(aggregateFunction = f)
-        }
-        (projAttrs.take(nk): Seq[NamedExpression], rewritten,
-          projAttrs: Seq[Attribute])
-      }
-
+    val bucketExpr: Expression = Pmod(new Murmur3Hash(payloadAttrs.take(keys.length)),
+      Literal(SketchAgg.PackBuckets))
     // Adaptive-bypass plumbing (see SketchAgg.BypassSampleRows): sample
     // sizes snapshotted at execute, singleton exprs built driver-side,
-    // the codegen'd projection compiled per task (codegen cache dedups).
+    // the projection built per task.
     val bypassSample = SketchAgg.BypassSampleRows.toLong
     val bypassRecheck = SketchAgg.BypassRecheckRows
-    val bypassExprs: Option[Seq[Expression]] =
-      if (nk == 0) None
-      else singletonExprs(effKeys, effAggs)
+    val bypassExprs = if (keys.isEmpty) None else singletonExprs(in.keys, in.aggs)
     val mBypassTasks = longMetric("bypassTasks")
     val mBypassRows = longMetric("bypassRows")
 
-    child.execute().mapPartitions { rows0 =>
-      val rows: Iterator[InternalRow] =
-        if (allAttrs) rows0
-        else {
-          val proj = UnsafeProjection.create(projExprs, childOut)
-          rows0.map(proj)
-        }
-      val readers = effKeys.map(k => keyReaderFor(k, effOut)).toArray
-      // ordinal of an attribute child in the effective input, -1 if
-      // the child is a computed expression (cannot happen post-proj)
-      def attrOrd(e: Expression): Int = e match {
-        case a: AttributeReference => effOut.indexWhere(_.exprId == a.exprId)
-        case _ => -1
-      }
-      // bind agg children to the effective input and build states
-      var bufOrd = nk
-      val states: Array[AggState] = effAggs.map { e =>
-        e.aggregateFunction match {
-          case u: UniqSketch =>
-            val bound = BindReferences.bindReference(u.child, effOut)
-            val st = new AggState.UniqState(u.copy(child = bound), bufOrd)
-            bufOrd += 1; st
-          case a: graft.functions.ChAny =>
-            val bound = a.copy(
-              child = BindReferences.bindReference(a.child, effOut))
-            val st = new AggState.AnyState(bound, bufOrd); bufOrd += 1; st
-          case SketchAgg.CountStar() =>
-            val st = new AggState.CountState(-1, bufOrd); bufOrd += 1; st
-          case Count(Seq(c)) =>
-            val o = attrOrd(c)
-            val st: AggState =
-              if (o >= 0) new AggState.CountState(o, bufOrd)
-              else new AggState.CountExprState(
-                BindReferences.bindReference(c, effOut), bufOrd)
-            bufOrd += 1; st
-          case Sum(c, ctx) =>
-            val o = attrOrd(c)
-            val ansi = ctx.evalMode == EvalMode.ANSI
-            val st: AggState = if (o >= 0) {
-              val get: InternalRow => Long = c.dataType match {
-                case IntegerType => r => r.getInt(o).toLong
-                case ShortType => r => r.getShort(o).toLong
-                case ByteType => r => r.getByte(o).toLong
-                case t => throw new IllegalStateException(t.toString)
-              }
-              new AggState.SumState(o, get, bufOrd, ansi)
-            } else new AggState.SumExprState(
-              BindReferences.bindReference(c, effOut), bufOrd, ansi)
-            bufOrd += 1; st
-          case Average(c, _) =>
-            val o = attrOrd(c)
-            val st: AggState = if (o >= 0) {
-              val get: InternalRow => Double = c.dataType match {
-                case IntegerType => r => r.getInt(o).toDouble
-                case ShortType => r => r.getShort(o).toDouble
-                case ByteType => r => r.getByte(o).toDouble
-                case t => throw new IllegalStateException(t.toString)
-              }
-              new AggState.AvgState(o, get, bufOrd)
-            } else new AggState.AvgExprState(
-              BindReferences.bindReference(c, effOut), bufOrd)
-            bufOrd += 2; st
-          case other => throw new IllegalStateException(other.toString)
-        }
-      }.toArray
-      val gmap = new GroupKeyMap(isStr, nullable)
-      val toUnsafe = UnsafeProjection.create(outSchema)
-
-      // Streams the flush window lazily: one reused output row, no
-      // per-group copy — the shuffle writer serializes each row's
-      // bytes before pulling the next, so materializing the window
-      // into an Array would only double peak memory right at the
-      // boundary the flush threshold exists to bound. The map
-      // and states stay live until the window is drained; the DRIVING
-      // iterator below resets them before starting the next window.
-      def emit(): Iterator[InternalRow] = {
-        // 0 keys: always exactly one row per flush window (a global
-        // agg over an empty partition still contributes a zero state)
-        val nGroups = if (nk == 0) math.max(gmap.n, 1) else gmap.n
-        var ai0 = 0
-        while (ai0 < states.length) {
-          states(ai0).ensure(math.max(nGroups, 1)); ai0 += 1
-        }
-        val out = new GenericInternalRow(outWidth)
-        new Iterator[InternalRow] {
-          private var g = 0
-          override def hasNext: Boolean = g < nGroups
-          override def next(): InternalRow = {
-            writeKey(gmap, g, out, isStr)
-            var ord = nk
-            var ai = 0
-            while (ai < states.length) {
-              states(ai) match {
-                case avg: AggState.AvgState =>
-                  out.update(ord, avg.partialSum(g)); ord += 1
-                  out.setLong(ord, avg.partialCnt(g)); ord += 1
-                case avg: AggState.AvgExprState =>
-                  out.update(ord, avg.partialSum(g)); ord += 1
-                  out.setLong(ord, avg.partialCnt(g)); ord += 1
-                case st =>
-                  out.update(ord, st.partialValue(g)); ord += 1
-              }
-              ai += 1
-            }
-            g += 1
-            toUnsafe(out)
-          }
-        }
-      }
-
-      val bypassProj: Option[UnsafeProjection] =
-        bypassExprs.map(es => UnsafeProjection.create(es, effOut))
-
-      val payloadIter: Iterator[InternalRow] = new Iterator[InternalRow] {
-        private var pending: Iterator[InternalRow] = Iterator.empty
-        private var done = false
-        private var needReset = false
-        private var sampled = 0L // rows aggregated before the decision
-        private var decided = bypassProj.isEmpty
-        private var countedBypass = false // bypassTasks counts tasks once
-        private def consume(): Unit = {
-          if (needReset) { // previous window fully drained: recycle
-            gmap.reset()
-            var ai = 0
-            while (ai < states.length) { states(ai).reset(0); ai += 1 }
-            needReset = false
-          }
-          // aggregate until flush threshold, sample boundary (pre-
-          // decision only), or input end
-          var aggregate = true
-          while (aggregate) {
-            aggregate = false
-            val stopAt = if (decided) Long.MaxValue else bypassSample
-            // state capacity is ensured ONLY when a new group appears
-            // (gmap.n moved) — the per-row per-state ensure() calls
-            // were ~a virtual call + bounds check × states × rows in
-            // the jstack profile of the map path
-            var ensured = 0
-            while (rows.hasNext && gmap.n < flushAt && sampled < stopAt) {
-              val row = rows.next()
-              var i = 0
-              while (i < nk) { readers(i)(row, gmap, i); i += 1 }
-              val g = if (nk == 0) ensureZero()
-                else gmap.findOrInsert(gmap.rowHash())
-              if (gmap.n != ensured) {
-                ensured = gmap.n
-                var ae = 0
-                while (ae < states.length) { states(ae).ensure(ensured); ae += 1 }
-              }
-              var ai = 0
-              while (ai < states.length) {
-                states(ai).update(g, row); ai += 1
-              }
-              sampled += 1
-            }
-            if (!decided) {
-              decided = true
-              if (rows.hasNext && sampled > 0 &&
-                  gmap.n >= SketchAgg.BypassRatio * sampled) {
-                // futile map (≈ every row opened a new group): drain
-                // the sampled window, then stream the next
-                // [[SketchAgg.BypassRecheckRows]] rows as one-row
-                // partials through the codegen'd projection — no
-                // readers, no hashing, no map. NOT unbounded: a
-                // clustered-prefix partition (high-NDV head, repetitive
-                // tail) re-samples after the window so the map comes
-                // back exactly when it stops being futile.
-                if (!countedBypass) { mBypassTasks.add(1); countedBypass = true }
-                val proj = bypassProj.get
-                pending = emit() ++ new Iterator[InternalRow] {
-                  private var streamed = 0L
-                  override def hasNext: Boolean =
-                    streamed < bypassRecheck && rows.hasNext
-                  override def next(): InternalRow = {
-                    mBypassRows.add(1)
-                    streamed += 1
-                    proj(rows.next())
-                  }
-                }
-                // after the streamed window drains, hasNext() re-enters
-                // consume(), which recycles the map and re-samples; an
-                // exhausted input just emits the (empty) next window
-                needReset = true
-                decided = false
-                sampled = 0L
-                return
-              }
-              // no bypass: resume aggregating the SAME window — a
-              // non-triggering task must not pay an extra emit/reset
-              // boundary at the sample mark
-              aggregate = rows.hasNext && gmap.n < flushAt
-            }
-          }
-          pending = emit()
-          if (rows.hasNext) needReset = true else done = true
-        }
-        private def ensureZero(): Int = {
-          if (gmap.n == 0) { gmap.findOrInsert(gmap.rowHash()) } else 0
-        }
-        override def hasNext: Boolean = {
-          while (!pending.hasNext && !done) consume()
-          pending.hasNext
-        }
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          pending.next()
-        }
-      }
-
+    child.execute().mapPartitions { rows =>
+      val pass = openUpdate(in, rows, flushAt)
+      val bypass = bypassExprs.map(es => Bypass(UnsafeProjection.create(es, in.input),
+        bypassSample, bypassRecheck, mBypassTasks, mBypassRows))
+      val payloadIter = windows(pass, UnsafeProjection.create(schema), bypass)
       if (!packedLocal) payloadIter
       else new PackingIterator(payloadIter,
         UnsafeProjection.create(Seq(bucketExpr), payloadAttrs),
@@ -1233,7 +1480,6 @@ case class PartialSketchAggExec(
         packBitmapKept)
     }
   }
-
   override protected def withNewChildInternal(newChild: SparkPlan): PartialSketchAggExec = {
     val c = copy(child = newChild)
     c.outputMemo = output // keep exprIds stable across copies (see memo)
@@ -1385,12 +1631,6 @@ case class FinalSketchAggExec(
 
   override def output: Seq[Attribute] = resultExprs.map(_.toAttribute)
 
-  /** Payload attributes of packed sub-rows — same schema/ordinals the
-    * unpacked exchange would carry (keys, then buffer columns). */
-  private lazy val payloadAttrs: Seq[Attribute] =
-    keys.map(_.toAttribute) ++ bufferFields.map(f =>
-      AttributeReference(f.name, f.dataType, f.nullable)())
-
   override lazy val metrics = Map(
     // whole hash-merge loop (fetch + merge compute), summed over tasks
     "mergeLoopNs" -> org.apache.spark.sql.execution.metric.SQLMetrics
@@ -1421,20 +1661,12 @@ case class FinalSketchAggExec(
     else ClusteredDistribution(Seq(child.output.head)) :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val keyTypes = keys.map(_.dataType).toArray
-    val isStr = keyIsString
-    val nullable = keyNullable
-    val nk = keys.length
-    val aggsLocal = aggs
-    val resultLocal = resultExprs
-    val keysLocal = keys
     val maxGroups = SketchAgg.FinalMaxGroups
     // packed: sub-rows carry the payload schema at the same ordinals
-    // the unpacked exchange rows would — everything below reads
-    // through `childOutput`/`rows` unchanged
-    val childOutput = if (packed) payloadAttrs else child.output
+    // the unpacked exchange rows would
+    val payload = if (packed) payloadOutput else child.output
     val packedLocal = packed
-    val payloadWidth = childOutput.length
+    val payloadWidth = payload.length
     val (packRecBytes, packBitmapKept) = packRecordSpec
     val packBitmapElided =
       if (packRecBytes > 0 && packBitmapKept == 0) payloadBitmapBytes else 0
@@ -1450,207 +1682,73 @@ case class FinalSketchAggExec(
           // in the fixed slot — same arithmetic getBinary uses before
           // copying). The serializer REUSES that buffer on the next
           // fetch, so every sub-row must be fully merged before the
-          // outer iterator's hasNext/next runs again — the merge loop
-          // below and the sort-fallback feed both do exactly that
-          // (flatMap only advances the outer once the blob drains).
+          // outer iterator's hasNext/next runs again — [[merge]] and
+          // its sort-fallback feed both do exactly that (flatMap only
+          // advances the outer once the blob drains).
           val ur = r.asInstanceOf[UnsafeRow]
           val offSize = ur.getLong(1)
           new BlobRows(ur.getBaseObject,
             ur.getBaseOffset + (offSize >> 32).toInt,
             offSize.toInt, payloadWidth, packRecBytes, packBitmapElided)
         }
-      // key parts sit at ordinals 0..nk-1 of the partial row
-      val readers = keyTypes.zipWithIndex.map { case (t, i) => keyReader(t, i) }.toArray
-      var bufOrd = nk
-      val states: Array[AggState] = aggsLocal.map { e =>
-        e.aggregateFunction match {
-          case u: UniqSketch =>
-            val st = new AggState.UniqState(u, bufOrd); bufOrd += 1; st
-          case a: graft.functions.ChAny =>
-            val st = new AggState.AnyState(a, bufOrd); bufOrd += 1; st
-          case _: Count =>
-            val st = new AggState.CountState(-1, bufOrd); bufOrd += 1; st
-          case Sum(_, ctx) =>
-            val st = new AggState.SumState(-1, null, bufOrd,
-              ctx.evalMode == EvalMode.ANSI); bufOrd += 1; st
-          case _: Average =>
-            val st = new AggState.AvgState(-1, null, bufOrd); bufOrd += 2; st
-          case other => throw new IllegalStateException(other.toString)
-        }
-      }.toArray
-      val gmap = new GroupKeyMap(isStr, nullable)
-      var sawAny = false
-      // hash-merge until done OR the in-memory group cap (the final
-      // stage cannot emit-and-reset like the partial stage — a group
-      // may still receive merges — so past the cap it falls back to
-      // sort-based merging, mirroring ObjectHashAggregateExec).
-      // Timing: the loop is metered whole; every 128th (hasNext, next)
-      // pair is timed and extrapolated to split exchange fetch+deser
-      // from merge compute (see the metrics scaladoc).
-      // next() and hasNext() are timed SEPARATELY around the merge —
-      // the merge must complete before hasNext advances the exchange
-      // iterator, whose reused deserialization buffer backs the
-      // zero-copy sub-rows (see the flatMap above)
-      val loopT0 = System.nanoTime()
-      var fetchNs = 0L
-      var rowCnt = 0L
-      var more = rows.hasNext
-      // state capacity ensured only when a new group appears (see the
-      // partial loop's note) — not per row per state
-      var ensured = 0
-      while (more && gmap.n < maxGroups) {
-        val sampled = (rowCnt & 127) == 0
-        var t0 = if (sampled) System.nanoTime() else 0L
-        val row = rows.next()
-        if (sampled) fetchNs += (System.nanoTime() - t0) << 7
-        rowCnt += 1
-        sawAny = true
-        var i = 0
-        while (i < nk) { readers(i)(row, gmap, i); i += 1 }
-        val g = if (nk == 0) { if (gmap.n == 0) gmap.findOrInsert(gmap.rowHash()) else 0 }
-          else gmap.findOrInsert(gmap.rowHash())
-        if (gmap.n != ensured) {
-          ensured = gmap.n
-          var ae = 0
-          while (ae < states.length) { states(ae).ensure(ensured); ae += 1 }
-        }
-        var ai = 0
-        while (ai < states.length) {
-          states(ai).mergeRow(g, row); ai += 1
-        }
-        t0 = if (sampled) System.nanoTime() else 0L
-        more = rows.hasNext
-        if (sampled) fetchNs += (System.nanoTime() - t0) << 7
-      }
-      mMergeLoop.add(System.nanoTime() - loopT0)
-      mFetch.add(fetchNs)
-      // result projection over (keys ++ agg result attrs)
-      val aggResultAttrs = aggsLocal.map(_.resultAttribute)
-      val proj = UnsafeProjection.create(resultLocal,
-        keysLocal.map(_.toAttribute) ++ aggResultAttrs)
-      val mid = new GenericInternalRow(nk + states.length)
-
-      if (!rows.hasNext) {
-        // in-memory path (the overwhelmingly common case)
-        // global agg over an empty exchange partition: emit the default
-        // state row (count 0, uniq 0, sum/avg NULL) exactly once — only
-        // the single AllTuples partition exists, so this is the one row
-        val nGroups =
-          if (nk == 0 && !sawAny) { gmap.findOrInsert(gmap.rowHash()); 1 }
-          else gmap.n
-        new Iterator[InternalRow] {
-          private var g = 0
-          override def hasNext: Boolean = g < nGroups
-          override def next(): InternalRow = {
-            writeKey(gmap, g, mid, isStr)
-            var ai = 0
-            while (ai < states.length) {
-              states(ai).ensure(g + 1)
-              mid.update(nk + ai, states(ai).resultValue(g))
-              ai += 1
-            }
-            g += 1
-            proj(mid)
-          }
-        }
-      } else {
-        // Sort-based fallback: spill everything seen so far plus the
-        // rest of the input into an UnsafeKVExternalSorter (the same
-        // machinery HashAggregateExec/ObjectHashAggregateExec fall
-        // back to), then merge adjacent equal-key runs. Bounded
-        // memory: the sorter spills to disk under memory pressure;
-        // only one group's state is live at a time.
-        val keySchema = StructType(childOutput.take(nk).map(a =>
-          StructField(a.name, a.dataType, a.nullable)))
-        val valSchema = StructType(childOutput.drop(nk).map(a =>
-          StructField(a.name, a.dataType, a.nullable)))
-        val env = org.apache.spark.SparkEnv.get
-        val sorter = new org.apache.spark.sql.execution.UnsafeKVExternalSorter(
-          keySchema, valSchema, env.blockManager, env.serializerManager,
-          org.apache.spark.sql.graftbridge.Bridge.taskPageSizeBytes(),
-          Integer.MAX_VALUE, java.lang.Long.MAX_VALUE)
-        // 1. re-serialize the accumulated map as synthetic partial rows
-        val keyRow = new GenericInternalRow(math.max(nk, 1))
-        val keyToUnsafe = UnsafeProjection.create(keySchema)
-        val bufWidth = childOutput.length - nk
-        val bufRow = new GenericInternalRow(bufWidth)
-        val bufToUnsafe = UnsafeProjection.create(valSchema)
-        var g = 0
-        while (g < gmap.n) {
-          writeKey(gmap, g, keyRow, isStr)
-          var ord = 0
-          var ai = 0
-          while (ai < states.length) {
-            states(ai) match {
-              case avg: AggState.AvgState =>
-                bufRow.update(ord, avg.partialSum(g)); ord += 1
-                bufRow.setLong(ord, avg.partialCnt(g)); ord += 1
-              case st =>
-                bufRow.update(ord, st.partialValue(g)); ord += 1
-            }
-            ai += 1
-          }
-          sorter.insertKV(keyToUnsafe(keyRow), bufToUnsafe(bufRow))
-          g += 1
-        }
-        gmap.reset()
-        locally { var ai = 0; while (ai < states.length) { states(ai).reset(0); ai += 1 } }
-        // 2. feed the remaining partial rows, split key/buffer
-        val splitKey = UnsafeProjection.create(childOutput.take(nk), childOutput)
-        val splitVal = UnsafeProjection.create(childOutput.drop(nk), childOutput)
-        while (rows.hasNext) {
-          val r = rows.next()
-          sorter.insertKV(splitKey(r), splitVal(r))
-        }
-        // 3. merge adjacent equal-key runs (equal keys have equal
-        // UnsafeRow bytes — both insert paths project the same schema
-        // — and the sorter orders by key bytes, so runs are contiguous)
-        val iter = sorter.sortedIterator()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => sorter.cleanupResources()))
-        val joined = new JoinedRow
-        new Iterator[InternalRow] {
-          private var has = iter.next()
-          override def hasNext: Boolean = has
-          override def next(): InternalRow = {
-            if (!has) throw new NoSuchElementException
-            val curKey = iter.getKey.copy()
-            var ai = 0
-            while (ai < states.length) {
-              states(ai).ensure(1); states(ai).clear(0); ai += 1
-            }
-            var more = true
-            while (more) {
-              joined(iter.getKey, iter.getValue)
-              var aj = 0
-              while (aj < states.length) { states(aj).mergeRow(0, joined); aj += 1 }
-              has = iter.next()
-              more = has && iter.getKey == curKey
-            }
-            var i = 0
-            while (i < nk) {
-              if (curKey.isNullAt(i)) mid.update(i, null)
-              else keyTypes(i) match {
-                case StringType => mid.update(i, curKey.getUTF8String(i))
-                case LongType => mid.setLong(i, curKey.getLong(i))
-                case IntegerType | DateType => mid.setInt(i, curKey.getInt(i))
-                case ShortType => mid.setShort(i, curKey.getShort(i))
-                case ByteType => mid.setByte(i, curKey.getByte(i))
-                case t => throw new IllegalStateException(t.toString)
-              }
-              i += 1
-            }
-            var ak = 0
-            while (ak < states.length) {
-              mid.update(nk + ak, states(ak).resultValue(0)); ak += 1
-            }
-            proj(mid)
-          }
-        }
-      }
+      merge(rows, payload, resultExprs, maxGroups, { (loopNs, fetchNs) =>
+        mMergeLoop.add(loopNs)
+        mFetch.add(fetchNs)
+      })
     }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): FinalSketchAggExec =
+    copy(child = newChild)
+}
+
+/** Partial and final as one pass over a one-partition input: the
+  * reference's single-stream Aggregator, which merges mergeable state
+  * only across streams and shards (SURVEY §2.4). Input rows update the
+  * typed map and each group's result goes through the result
+  * projection: no bypass, no packing, no wire codec. Past
+  * [[SketchAgg.PartialFlushGroups]] groups the pass hands its windows to
+  * the final's merge in-process, so memory stays bounded and
+  * [[SketchAgg.FinalMaxGroups]]' sort fallback still applies.
+  * [[SingleStream]] plans it in place of a Partial/Final pair. */
+case class CompleteSketchAggExec(
+    keys: Seq[NamedExpression],
+    aggList: SketchAgg.AggList,
+    resultExprs: Seq[NamedExpression],
+    child: SparkPlan) extends SketchAggExecBase {
+
+  def aggs: Seq[AggregateExpression] = aggList.aggs
+
+  override def output: Seq[Attribute] = resultExprs.map(_.toAttribute)
+
+  // the aggregate results and computed keys are made here
+  override def producedAttributes: AttributeSet =
+    AttributeSet(aggs.map(_.resultAttribute)) ++ AttributeSet(output) ++
+      AttributeSet(keys.map(_.toAttribute))
+
+  override def requiredChildDistribution: Seq[Distribution] =
+    if (keys.isEmpty) AllTuples :: Nil
+    else ClusteredDistribution(keys.map {
+      case al: Alias => al.child
+      case k => k
+    }) :: Nil
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val in = updateInput
+    val flushAt = SketchAgg.PartialFlushGroups
+    val maxGroups = SketchAgg.FinalMaxGroups
+    val payload = payloadOutput
+    val schema = payloadSchema
+    child.execute().mapPartitions { rows =>
+      val pass = openUpdate(in, rows, flushAt)
+      pass.fill(Long.MaxValue)
+      if (!pass.rows.hasNext)
+        resultRows(pass.gmap, pass.states, pass.groups, resultProjection(resultExprs))
+      else merge(windows(pass, UnsafeProjection.create(schema), None),
+        payload, resultExprs, maxGroups, (_, _) => ())
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): CompleteSketchAggExec =
     copy(child = newChild)
 }

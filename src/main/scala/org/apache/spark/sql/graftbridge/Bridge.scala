@@ -26,6 +26,11 @@ object Bridge {
   def taskPageSizeBytes(): Long =
     org.apache.spark.TaskContext.get().taskMemoryManager().pageSizeBytes()
 
+  /** The `n` least of `rows` by `ord`, in order — what Spark's top-k
+    * operators take per partition; collection.Utils is private[spark]. */
+  def takeOrdered[T](rows: Iterator[T], n: Int, ord: Ordering[T]): Iterator[T] =
+    org.apache.spark.util.collection.Utils.takeOrdered(rows, n)(ord)
+
   /** The overflow error the codegen ANSI Add path raises
     * (ARITHMETIC_OVERFLOW error class + hint) — QueryExecutionErrors
     * is private[sql]. */

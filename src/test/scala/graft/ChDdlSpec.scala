@@ -602,6 +602,31 @@ class ChDdlSpec extends SparkSpec {
   private def wholeStage(df: org.apache.spark.sql.DataFrame): Boolean =
     nodeNames(df).exists(_.startsWith("WholeStageCodegen"))
 
+  /** Does `df`'s executed plan hold a partial aggregate? */
+  private def partialAggregate(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val p = df.queryExecution.executedPlan.toString
+    nodeNames(df).contains("PartialSketchAgg") || p.contains("partial_")
+  }
+
+  test("a GROUP BY over a dialect table's stored parts is one complete pass, same rows") {
+    ChDdl.reset(spark)
+    ChDdl.execute(spark,
+      "CREATE TABLE gp (d Date, k UInt64, v Int32) ENGINE = MergeTree(d, k, 8192)")
+    for (i <- 0 until 3)
+      ChDdl.execute(spark, s"INSERT INTO gp SELECT toDate('2024-01-01'), " +
+        s"number % 7, toInt32(number + $i) FROM system.numbers LIMIT 1000")
+    val q = "SELECT k, count() AS c, sum(v) AS s, max(v) AS m FROM gp GROUP BY k ORDER BY k"
+    val df = ChDdl.execute(spark, q).get
+    val expected = (0 until 7).map { k =>
+      val vs = for (i <- 0 until 3; n <- 0 until 1000 if n % 7 == k) yield (n + i).toLong
+      s"$k|${vs.size}|${vs.sum}|${vs.max}"
+    }
+    assert(df.collect().map(_.mkString("|")).toSeq === expected)
+    assert(!partialAggregate(df), df.queryExecution.executedPlan)
+    assert(!nodeNames(df).exists(_.contains("Exchange")), df.queryExecution.executedPlan)
+    ChDdl.execute(spark, "DROP TABLE gp")
+  }
+
   test("a SELECT over at most 20 x 8192 parquet rows runs interpreted, a larger one compiled") {
     import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     idsView("ids_small", 100000, 1)
@@ -624,13 +649,14 @@ class ChDdlSpec extends SparkSpec {
     assert(bigCompiles > 0)
     assert(smallRows.size === 33)
     assert(smallRows === bigRows)
-    // an aggregate and top-k plan no whole-stage code either; Spark
-    // still compiles the partial aggregate's row joiner and the top-k
-    // ordering, which have no interpreted form
+    // an aggregate and top-k: one complete aggregate pass, an
+    // interpreted top-k ordering, nothing compiled
     val top = "SELECT k, count() AS c, sum(id * 9931) AS s FROM TBL WHERE NOT dup " +
       "GROUP BY k ORDER BY c DESC, s DESC LIMIT 10"
-    val (smallTop, smallTopRows, _) = run(top, "ids_small")
+    val (smallTop, smallTopRows, smallTopCompiles) = run(top, "ids_small")
     assert(!wholeStage(smallTop), smallTop.queryExecution.executedPlan)
+    assert(smallTopCompiles === 0)
+    assert(!partialAggregate(smallTop), smallTop.queryExecution.executedPlan)
     val (bigTop, bigTopRows, _) = run(top, "ids_big")
     assert(wholeStage(bigTop), bigTop.queryExecution.executedPlan)
     assert(smallTopRows.size === 10)

@@ -74,6 +74,73 @@ class PlanShapeSpec extends SparkSpec {
       .collect().map(_.toString).toSeq)
   }
 
+  /** Aggregate nodes of `df`'s executed plan, through AQE stages. */
+  private def aggNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.aggregate.BaseAggregateExec] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def walk(p: SparkPlan): Seq[BaseAggregateExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case a: BaseAggregateExec => a +: a.children.flatMap(walk)
+      case _ => p.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("an aggregate over one split is one complete pass, with the spread scan's rows") {
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Complete
+    val dir = idsParquet(100000, 8)
+    def ids = spark.read.parquet(dir).selectExpr("id", "CAST(k AS INT) AS k")
+    for ((mk, kind) <- Seq[(() => DataFrame, Class[_])](
+        (() => ids.groupBy("k").agg(Map("id" -> "sum", "*" -> "count")),
+          classOf[HashAggregateExec]),
+        (() => ids.groupBy("k").agg(org.apache.spark.sql.functions.expr(
+          "size(collect_set(id % 5))").as("n")), classOf[ObjectHashAggregateExec]),
+        (() => ids.groupBy("k").agg(org.apache.spark.sql.functions.expr(
+          "max(CAST(id AS STRING))").as("m")), classOf[SortAggregateExec]))) {
+      val df = mk()
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val aggs = aggNodes(df)
+      assert(aggs.size === 1, df.queryExecution.executedPlan)
+      assert(kind.isInstance(aggs.head), df.queryExecution.executedPlan)
+      assert(aggs.head.aggregateExpressions.forall(_.mode == Complete))
+      assert(!plan(df).contains("Exchange"), plan(df))
+      val spread = spreadScans {
+        val s = mk()
+        assert(aggNodes(s).size === 2, plan(s))
+        s.collect().map(_.toString).sorted.toSeq
+      }
+      assert(rows.size === 97)
+      assert(rows === spread)
+    }
+  }
+
+  test("a keyless aggregate over an empty single split returns one default row") {
+    val dir = idsParquet(1000, 2)
+    val df = spark.read.parquet(dir).where("id < 0").selectExpr("count(*)", "sum(id)")
+    assert(df.collect().map(_.toString).toSeq === Seq("[0,null]"))
+    assert(aggNodes(df).size === 1, plan(df))
+    assert(plan(df).contains("SingleSplitScan"), plan(df))
+  }
+
+  test("a count(DISTINCT) over one split keeps its aggregate chain and its rows") {
+    val dir = idsParquet(100000, 8)
+    def q = spark.read.parquet(dir).selectExpr("CAST(k AS INT) AS k", "id % 13 AS m")
+      .groupBy("k").agg(org.apache.spark.sql.functions.expr("count(DISTINCT m)").as("d"))
+    val df = q
+    val rows = df.collect().map(_.toString).sorted.toSeq
+    val (spreadNodes, spread) = spreadScans {
+      val s = q
+      (aggNodes(s).size, s.collect().map(_.toString).sorted.toSeq)
+    }
+    assert(aggNodes(df).size === spreadNodes, plan(df))
+    assert(spreadNodes === 4)
+    assert(rows === spread)
+    assert(rows.size === 97)
+  }
+
   test("q70: filter and projection reach the parquet scan (PREWHERE effect)") {
     val p = plan(graft.queries.MiscQueries.q70(spark, sfDir))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), EqualTo(l_quantity,50.0)]"), p)
@@ -108,7 +175,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q03: aggregation is two-phase (map-side partial before shuffle)") {
-    val p = plan(graft.queries.CoreQueries.q03(spark, sfDir))
+    val p = spreadScans(plan(graft.queries.CoreQueries.q03(spark, sfDir)))
     assert(p.contains("partial_count") || p.contains("HashAggregate(keys="), p)
     // partial agg appears below the exchange: two HashAggregate nodes
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
@@ -328,7 +395,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q118: vocabulary rollup partial-aggregates inside the generate stage") {
-    val p = plan(graft.queries.PipelineQueries.q118(spark, sfDir))
+    val p = spreadScans(plan(graft.queries.PipelineQueries.q118(spark, sfDir)))
     assert(p.contains("Generate"), p)
     // map-side partial + final: the shuffle carries partial vocabulary
     // counts, never the raw token stream — either the codegen

@@ -279,11 +279,13 @@ class SketchAggSpec extends SparkSpec {
     SketchAgg.BypassSampleRows = 256
     SketchAgg.BypassRecheckRows = 1024
     try {
-      // one partition: a high-NDV HEAD (2000 unique keys) then a
-      // repetitive TAIL (100k rows of one key). A one-shot decision
+      // a high-NDV HEAD (2000 unique keys) then a repetitive TAIL
+      // (100k rows of one key), over two partitions so the partial
+      // still runs (one partition aggregates in one complete pass,
+      // which has no bypass). A one-shot decision
       // would stream all ~100k tail rows as one-row partials; the
       // re-check must bring the map back within a few windows.
-      def q = spark.range(0, 102000, 1, 1)
+      def q = spark.range(0, 102000, 1, 2)
         .withColumn("k",
           when(col("id") < 2000, col("id")).otherwise(lit(-1L)))
         .withColumn("v", pmod(col("id"), lit(7)).cast("int"))
@@ -403,7 +405,7 @@ class SketchAggSpec extends SparkSpec {
     }
   }
 
-  test("single-split scan: partial and final run with no exchange between them") {
+  test("single-split scan: one complete SketchAgg pass, no exchange") {
     val dir = java.nio.file.Files.createTempDirectory("sa_single").toString + "/t"
     base.select("k1", "u", "v").write.parquet(dir)
     def scan = spark.read.parquet(dir)
@@ -414,8 +416,42 @@ class SketchAggSpec extends SparkSpec {
       compare(df)
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("SingleSplitScan"), p)
-      assert(p.contains("PartialSketchAgg") && p.contains("FinalSketchAgg"), p)
+      // the AQE plan string prints the final and the initial plan
+      assert("CompleteSketchAgg".r.findAllIn(p).size === 2, p)
+      assert(!p.contains("PartialSketchAgg") && !p.contains("FinalSketchAgg"), p)
       assert(!p.contains("Exchange"), p)
+    }
+  }
+
+  test("complete pass past the flush window merges its windows bit-identically") {
+    val saved = SketchAgg.PartialFlushGroups
+    val savedMax = SketchAgg.FinalMaxGroups
+    // one partition, many flush windows; the second query's 16-group
+    // cap also sends the merge to its sort fallback
+    def one = base.coalesce(1)
+    try {
+      for ((flush, cap) <- Seq((8, savedMax), (8, 16))) {
+        SketchAgg.PartialFlushGroups = flush
+        SketchAgg.FinalMaxGroups = cap
+        for (mk <- Seq(
+            () => one.groupBy("k1").agg(uniqCol("u").as("nu"), count(lit(1)).as("c"),
+              sum("v").as("s"), avg("v").as("a")),
+            () => one.groupBy("ks").agg(uniqCol("u").as("nu"), count(col("v")).as("cv")))) {
+          val df = mk()
+          val p = df.queryExecution.executedPlan.toString
+          assert(p.contains("CompleteSketchAgg") && !p.contains("PartialSketchAgg"), p)
+          val f = df.collect().map(_.toString).sorted.toSeq
+          SketchAgg.PartialFlushGroups = saved
+          SketchAgg.FinalMaxGroups = savedMax
+          assert(f === genericRows(mk()))
+          assert(f.length > 8)
+          SketchAgg.PartialFlushGroups = flush
+          SketchAgg.FinalMaxGroups = cap
+        }
+      }
+    } finally {
+      SketchAgg.PartialFlushGroups = saved
+      SketchAgg.FinalMaxGroups = savedMax
     }
   }
 
